@@ -74,6 +74,21 @@ object GraftSession {
       // UTC session timezone above, the stored values are the same
       // instants DuckDB sees, so oracle parity is unchanged.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // fork-free local file system (sources/LocalFs.scala). Without the
+      // native Hadoop library (libhadoop.so), Hadoop's local FS launches a
+      // `chmod` child process per file create and mkdir, and a `readlink`
+      // per link-status lookup, four per FileContext rename. One
+      // event-stream benchmark run (seed 1: a warm-up and two timed drains
+      // of 5 micro-batches, 4 vCPUs) launched 6,448 `readlink` and 2,102
+      // `chmod` processes, for state-store deltas, offset/commit logs and
+      // sink files of ~100 KB a batch; with these classes, none. The two
+      // keys cover both Hadoop APIs: FileSystem (sinks, parquet,
+      // reliable checkpoints) and FileContext (Spark's default streaming
+      // checkpoint manager). Checksums, the atomic rename and the
+      // permission bits written are unchanged.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
   }
 
   def get(appName: String = "graft"): SparkSession = {

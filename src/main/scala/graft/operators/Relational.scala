@@ -569,10 +569,12 @@ object Relational extends QueryModule {
     * dir is PER-JVM (pid-suffixed) and rebuilt per run: the driver's
     * harness may run Verify and Bench concurrently in separate processes
     * (the ArtifactStore r9/r10 lesson), and a shared stage would race a
-    * reader in one JVM against the delete in the other. */
+    * reader in one JVM against the delete in the other. It lives under
+    * `java.io.tmpdir`, as `ArtifactStore.path` does. */
   def protoRoundtrip(spark: SparkSession, dir: String): DataFrame = {
+    val tmp = System.getProperty("java.io.tmpdir", "/tmp").stripSuffix("/")
     val stage = new java.io.File(
-      s"/tmp/graft-proto-stage-${dir.replaceAll("[^a-zA-Z0-9]", "_")}-" +
+      s"$tmp/graft-proto-stage-${dir.replaceAll("[^a-zA-Z0-9]", "_")}-" +
         ProcessHandle.current().pid())
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
