@@ -3,26 +3,49 @@ package graft.functions
 import scala.util.Try
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Bounded persist() scope: query functions that cache a doubly-referenced
-  * subtree register it under a stable key. Re-invoking the same query
-  * (Verify, repeated tests in one session) reuses the already-materialized
-  * generation when the new plan is semantically identical (`sameResult`)
-  * and its session is still live; otherwise the previous generation is
-  * unpersisted before caching the new one — at most one live cached plan
-  * per scope, never a leak.
+/** The one cache and lineage-truncation policy of the engine.
+  *
+  * Scoped generations: query functions that cache a doubly-referenced
+  * subtree ([[persist]]) or truncate a stage table many branches of one
+  * action reference ([[checkpoint]]) register it under a family#variant
+  * key. Re-invoking the same query (Verify, repeated tests in one
+  * session) reuses the live generation when the new plan is semantically
+  * identical (`sameResult`); a new plan replaces it, and a family keeps
+  * at most [[MaxVariantsPerFamily]] variants (least recently used goes
+  * first).
+  *
+  * Lineage truncation ([[truncate]]) is for loop tables re-planned every
+  * round ([[iterate]]) and for stage tables whose full chain would
+  * otherwise be re-analysed per reference. The deployment decides how:
+  * `localCheckpoint` on local[N] (one JVM, no executor loss); a reliable
+  * `checkpoint` on a cluster with a checkpoint dir, so an executor loss
+  * does not fail the query; a columnar persist otherwise (lineage and
+  * planning cost stay, fault tolerance does not leave). This object is
+  * the only place in the engine that truncates lineage. Reliable
+  * checkpoint files are not deleted here: Spark's ContextCleaner removes
+  * them once the handle is collected, if
+  * `spark.cleaner.referenceTracking.cleanCheckpoints` is on.
   */
 object ScopedCache {
-  private val live = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  // per-scope-family insertion order, for LRU eviction across variants
-  private val order = scala.collection.mutable.LinkedHashSet.empty[String]
+
+  /** One registered generation: `src` is the plan the caller handed in,
+    * `handle` what it got back. A persisted plan is its own handle and
+    * keeps its lineage; a truncation's handle is a new DataFrame whose
+    * blocks cannot be recomputed. */
+  private final case class Entry(src: DataFrame, handle: DataFrame) {
+    def truncated: Boolean = !(handle eq src)
+  }
+
+  // insertion order = recency: a hit re-inserts its key
+  private val entries = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
 
   /** Max live generations per scope family. >1 so alternating
-    * mixed-parameter callers (the ADVICE r5 thrash: q72 vs q76 with a
-    * non-default maxDF, or a 1x/10x probe loop) each keep their own
-    * generation; bounded so a session that shingles many corpora (test
-    * suites, probes) cannot accumulate pinned executor blocks without
-    * limit — the oldest variant in the family is unpersisted first. */
+    * mixed-parameter callers (q72 vs q76 with a non-default maxDF, or a
+    * 1x/10x probe loop) each keep their own generation; bounded so a
+    * session that shingles many corpora (test suites, probes) cannot
+    * accumulate pinned executor blocks without limit. */
   val MaxVariantsPerFamily = 4
 
   private def isLive(df: DataFrame): Boolean =
@@ -31,162 +54,140 @@ object ScopedCache {
   def persist(scope: String, df: DataFrame): DataFrame =
     persist(scope, "", df)
 
-  /** Cache `df` under (family, variant). Same variant + semantically
-    * identical plan → reuse the live generation; same variant + new plan
-    * → replace it; new variant → cache alongside the family's other
-    * variants, evicting the family's least-recently-persisted one beyond
-    * [[MaxVariantsPerFamily]]. */
-  def persist(family: String, variant: String, df: DataFrame): DataFrame = synchronized {
-    val key = if (variant.isEmpty) family else s"$family#$variant"
-    live.get(key) match {
-      case Some(old) if isLive(old) && (old.sparkSession eq df.sparkSession) &&
-          old.queryExecution.analyzed.sameResult(df.queryExecution.analyzed) =>
-        order.remove(key); order.add(key) // refresh recency
-        old
-      case maybeOld =>
-        maybeOld.filter(isLive).foreach(o => Try(o.unpersist(blocking = false)))
-        live.put(key, df)
-        order.remove(key); order.add(key)
-        val familyKeys = order.iterator
-          .filter(k => k == family || k.startsWith(family + "#")).toSeq
-        familyKeys.dropRight(MaxVariantsPerFamily).foreach { k =>
-          live.remove(k).filter(isLive).foreach(o => Try(o.unpersist(blocking = false)))
-          order.remove(k)
-        }
-        df.persist()
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // Checkpoint registry (r18): the bounded-generation contract applied
-  // to the r17 eager localCheckpoints.
-  //
-  // Storage policy (VERDICT r17 #4): lineage-TRUNCATING materialization
-  // is for (a) loop tables re-planned per iteration and (b) stage tables
-  // referenced by many branches of one action, where re-running
-  // analyzer+optimizer over the full chain per reference is the measured
-  // cost. On local[N] (one JVM, no executor loss) `localCheckpoint` is
-  // safe and cheapest. On a real cluster an unreplicated local
-  // checkpoint of a corpus-sized table turns an executor loss into a
-  // query failure, so there this gate prefers a RELIABLE checkpoint when
-  // `spark.sparkContext.getCheckpointDir` is configured, and otherwise
-  // falls back to a columnar persist (lineage kept — planning cost
-  // returns, fault tolerance does not leave).
-  // ------------------------------------------------------------------
-
-  /** (family#variant) -> (source df, truncated df). The SOURCE is kept so
-    * (1) a re-invocation with a semantically identical plan reuses the
-    * live checkpoint instead of re-materializing (the persist() contract,
-    * which the r17 raw localCheckpoints lost), and (2) plan audits can see
-    * THROUGH the RDD-scan leaf a checkpoint leaves in the executed plan
-    * (PlanSpec descends into [[checkpointSourceOf]] — ADVICE r17). */
-  private val ckpts =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame)]
-  private val ckptOrder = scala.collection.mutable.LinkedHashSet.empty[String]
+  /** Cache `df` under (family, variant). */
+  def persist(family: String, variant: String, df: DataFrame): DataFrame =
+    register(family, variant, df)(df.persist())
 
   def checkpoint(family: String, df: DataFrame): DataFrame =
     checkpoint(family, "", df)
 
-  /** Eagerly materialize `df` with lineage truncated, under ScopedCache's
-    * bounded-generation contract (same family/variant/plan → reuse; LRU
-    * beyond [[MaxVariantsPerFamily]]). Superseded/evicted generations are
-    * DROPPED from the registry but NOT unpersisted: a checkpoint cannot
-    * be recomputed, so an eager release would break any still-live
-    * consumer plan built on it — ContextCleaner reclaims the blocks once
-    * the last reference is collected (exactly the r17 behavior, now with
-    * at most a bounded number of generations strongly held). [[clear]]
-    * DOES unpersist them: its callers (Bench/probes, between passes)
-    * rebuild every plan from scratch afterwards. */
-  def checkpoint(family: String, variant: String, df: DataFrame): DataFrame = synchronized {
+  /** Eagerly [[truncate]] `df` under (family, variant). A superseded or
+    * evicted truncation is dropped from the registry but NOT released: its
+    * blocks cannot be recomputed, so releasing them would break any live
+    * consumer plan built on it. ContextCleaner reclaims them once the last
+    * reference is collected; [[clear]] releases them outright. */
+  def checkpoint(family: String, variant: String, df: DataFrame): DataFrame =
+    register(family, variant, df)(truncate(df, eager = true))
+
+  private def register(family: String, variant: String, df: DataFrame)(
+      make: => DataFrame): DataFrame = synchronized {
     val key = if (variant.isEmpty) family else s"$family#$variant"
-    ckpts.get(key) match {
-      case Some((src, ck)) if isLive(ck) && (src.sparkSession eq df.sparkSession) &&
-          src.queryExecution.analyzed.sameResult(df.queryExecution.analyzed) =>
-        ckptOrder.remove(key); ckptOrder.add(key)
-        ck
-      case _ =>
-        val sc = df.sparkSession.sparkContext
-        val ck =
-          if (sc.isLocal) df.localCheckpoint()
-          else if (sc.getCheckpointDir.isDefined) df.checkpoint()
-          else persist(family, variant, df) // cluster, no checkpoint dir
-        ckpts.put(key, (df, ck))
-        ckptOrder.remove(key); ckptOrder.add(key)
-        val familyKeys = ckptOrder.iterator
-          .filter(k => k == family || k.startsWith(family + "#")).toSeq
-        familyKeys.dropRight(MaxVariantsPerFamily).foreach { k =>
-          ckpts.remove(k) // dropped, not unpersisted — see scaladoc
-          ckptOrder.remove(k)
-        }
-        ck
+    entries.remove(key) match {
+      case Some(e) if isLive(e.handle) && (e.src.sparkSession eq df.sparkSession) &&
+          e.src.queryExecution.analyzed.sameResult(df.queryExecution.analyzed) =>
+        entries.put(key, e)
+        e.handle
+      case old =>
+        old.foreach(evict)
+        val e = Entry(df, make)
+        entries.put(key, e)
+        entries.keys.filter(k => k == family || k.startsWith(family + "#")).toSeq
+          .dropRight(MaxVariantsPerFamily).foreach(k => entries.remove(k).foreach(evict))
+        e.handle
     }
+  }
+
+  /** A persisted plan is unpersisted; a truncation is only dropped (see
+    * [[checkpoint]]). */
+  private def evict(e: Entry): Unit =
+    if (!e.truncated) release(e.handle, blocking = false)
+
+  /** Cut `df`'s lineage under the deployment policy above. `eager`
+    * materializes it now; otherwise the first action on the result does. */
+  def truncate(df: DataFrame, eager: Boolean): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    if (sc.isLocal) df.localCheckpoint(eager)
+    else if (sc.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else {
+      val p = df.persist()
+      if (eager) p.count()
+      p
+    }
+  }
+
+  /** Truncated fixed-point loop. Generation 0 is `init`, a truncation or
+    * a plain plan the loop owns (it is released like every generation
+    * once superseded); each round `step` derives the next generation from
+    * the live one, or returns None when there is nothing left to do.
+    * The derived plan is [[truncate]]d (`eager` as given) and handed to
+    * `settled`, the round's action and stop test. The superseded
+    * generation is released once its successor is materialized: right
+    * after an eager truncation, after `settled` for a lazy one (so a lazy
+    * loop's `settled` must run an action on the generation). If a step,
+    * a truncation or `settled` throws, the live generation is released
+    * before the exception propagates. Stops after `maxIters` rounds, on
+    * None, or when `settled` returns true; returns the live generation
+    * (the caller owns it) and the number of rounds run. */
+  def iterate(init: DataFrame, maxIters: Int, eager: Boolean = true)(
+      step: DataFrame => Option[DataFrame],
+      settled: DataFrame => Boolean = _ => false): (DataFrame, Int) = {
+    var live = init
+    var rounds = 0
+    var done = false
+    try {
+      while (!done && rounds < maxIters) step(live) match {
+        case None => done = true
+        case Some(next) =>
+          val prev = live
+          live = truncate(next, eager)
+          if (eager) releaseCheckpoint(prev)
+          try done = settled(live)
+          finally if (!eager) releaseCheckpoint(prev)
+          rounds += 1
+      }
+    } catch { case t: Throwable =>
+      releaseCheckpoint(live)
+      throw t
+    }
+    (live, rounds)
   }
 
   /** The registered source plan behind a checkpoint's RDD-scan leaf, by
     * the leaf's RDD id — how plan audits (PlanSpec) descend into the
     * pre-truncation stages. */
   def checkpointSourceOf(rddId: Int): Option[DataFrame] = synchronized {
-    ckpts.values.collectFirst {
-      case (src, ck) if isLive(ck) &&
-          (ck.queryExecution.analyzed match {
-            case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id == rddId
+    entries.values.collectFirst {
+      case e if e.truncated && isLive(e.handle) &&
+          (e.handle.queryExecution.analyzed match {
+            case r: LogicalRDD => r.rdd.id == rddId
             case _ => false
-          }) => src
+          }) => e.src
     }
   }
 
-  /** Release the cached blocks of a `localCheckpoint`'d DataFrame once a
-    * successor that superseded it is materialized (ContextCleaner would
-    * get there eventually via GC, but long sessions running iterative
-    * operators — q77/q78 label propagation, q100/q101 training loops —
-    * should not accumulate dead rdd blocks in the meantime).
+  /** Release a [[truncate]]d DataFrame's blocks once nothing reads it any
+    * more: a loop generation whose successor is materialized, or a
+    * one-shot stage table after its last action. Only the handle's own
+    * root is released — the truncated RDD, or the persisted plan under
+    * the fallback — never an upstream checkpoint its plan reads.
     *
-    * The TERMINAL model each training loop returns (k×dim / blocks×k×dim
-    * rows — a few KB) is deliberately NOT released here or by its
-    * consumers: the returned DataFrame is lazy, so the consumer cannot
-    * know when the caller has materialized its last downstream use, and
-    * an eager release would truncate a live plan (the lineage is gone
-    * after localCheckpoint). ContextCleaner reclaims it once the
-    * reference drops — the right trade for a k-row block (ADVICE r6). */
-  def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        // blocking: the eviction must finish inside the RELEASING
-        // query's own pass — non-blocking drains the dead blocks (and
-        // their GC pressure) into whatever the bench times NEXT, the
-        // round-3 q90/q91 anomaly re-created by the r17 loop
-        // checkpoints (q217 measured 1.7x its band right after q215's
-        // release until this flip)
-        r.rdd.unpersist(blocking = true); ()
-      case _ =>
-    }
+    * Blocking, so the eviction finishes inside the releasing query's own
+    * pass instead of draining into whatever a benchmark times next.
+    *
+    * A training loop's TERMINAL model (a few KB) is deliberately not
+    * released by its consumers: the returned DataFrame is lazy, so they
+    * cannot know when the caller's last downstream use has run, and the
+    * truncated blocks cannot be recomputed. ContextCleaner reclaims it
+    * once the reference drops. */
+  def releaseCheckpoint(df: DataFrame): Unit = release(df, blocking = true)
 
-  /** Drop every cached generation (benchmarks call this between passes so
-    * steady-state timings include the cached subtree's recomputation).
-    * `blocking = true` waits for block eviction to finish — benchmarks need
-    * this, or one query's cached blocks and the GC pressure of evicting
-    * them bleed into the next query's timed pass (the round-3 q90/q91
-    * anomaly: both ran right after q84's persisted subtree was dropped
-    * asynchronously). */
+  /** The one release path (loops, one-shot sites, eviction, [[clear]]):
+    * a truncation's blocks live on its RDD-scan root's RDD; a persisted
+    * plan goes through the cache manager (a no-op for a plan nobody
+    * persisted, such as a loop's untruncated generation 0). */
+  private def release(df: DataFrame, blocking: Boolean): Unit =
+    if (isLive(df)) Try(df.queryExecution.analyzed match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking)
+      case _ => df.unpersist(blocking)
+    })
+
+  /** Release every registered generation, truncations included: the
+    * callers (benchmarks and probes, between passes) rebuild every plan
+    * afterwards. `blocking = true` waits for the eviction to finish, so
+    * one query's blocks and the GC pressure of evicting them do not bleed
+    * into the next query's timed pass. */
   def clear(blocking: Boolean = false): Unit = synchronized {
-    live.values.filter(isLive).foreach(o => Try(o.unpersist(blocking)))
-    live.clear()
-    order.clear()
-    // registered checkpoints: the callers of clear() (Bench/probes,
-    // between passes) rebuild every plan afterwards, so unpersisting the
-    // unrecomputable blocks here is safe — and necessary, or each pass's
-    // checkpoints linger as dead blocks into the next query's timed
-    // window (the round-3 q90/q91 lesson applied to checkpoints)
-    ckpts.values.foreach { case (_, ck) =>
-      if (isLive(ck)) Try {
-        ck.queryExecution.analyzed match {
-          case r: org.apache.spark.sql.execution.LogicalRDD =>
-            r.rdd.unpersist(blocking); ()
-          case _ => Try(ck.unpersist(blocking))
-        }
-      }
-    }
-    ckpts.clear()
-    ckptOrder.clear()
+    entries.values.foreach(e => release(e.handle, blocking))
+    entries.clear()
   }
 }

@@ -998,19 +998,12 @@ object Curation extends QueryModule {
 
   private[graft] def funnelPartsOf(docs: DataFrame)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // r17: eager checkpoints instead of the three ScopedCache pins
-    // (the q217 rationale): q160 references these tables from 4 stage
-    // aggregates and q163 from 5 more branches, so the pins left every
-    // reference re-analyzing the full quality/gate/keep-first chains.
-    // Each stage still materializes exactly once (each checkpoint reads
-    // the previous one); every downstream reference is a narrow leaf.
-    // r18: through the ScopedCache checkpoint REGISTRY — bounded
-    // generations, cross-invocation reuse (q160+q163 in one session
-    // materialize once again), release on Bench settle, and the source
-    // plans stay auditable (ADVICE r17); the registry also gates
-    // localCheckpoint vs reliable-checkpoint/persist on deployment mode
-    // (these stage tables are corpus-sized — see the ScopedCache storage
-    // policy note).
+    // registry checkpoints: q160 references these tables from 4 stage
+    // aggregates and q163 from 5 more branches, so truncation spares every
+    // reference a re-analysis of the full quality/gate/keep-first chains.
+    // Each stage materializes exactly once per session (each checkpoint
+    // reads the previous one; q160 and q163 share the generations), and
+    // every downstream reference is a narrow leaf.
     val quality = graft.functions.ScopedCache.checkpoint("q160.quality",
       TextOps.qualityScoresOf(docs)
         .select(col("doc_id"), col("quality"), col("n_tokens")))
@@ -2136,14 +2129,10 @@ object Curation extends QueryModule {
     * has nothing to regularize against and would shift every target by
     * a corpus-dependent constant the card reader can't see. */
   /** The truncated (z, y) table every Platt piece loops and aggregates
-    * over — the r17 lineage-truncation fix (the cached table still
-    * carries the ~200-node featurizer plan; each GD step's fresh
-    * literals forced full re-analysis, ~125 ms/step measured), r18:
-    * through the checkpoint REGISTRY so q215's card and q224's three
-    * reliability branches read the SAME truncated table the fit looped
-    * over (VERDICT r17 #5) instead of re-planning the featurizer chain
-    * per branch — and so the blocks are released on Bench settle rather
-    * than lingering to GC (ADVICE r17). */
+    * over: the cached table still carries the ~200-node featurizer plan,
+    * which each GD step's fresh literals would otherwise re-analyse.
+    * Registered, so q215's card and q224's three reliability branches
+    * read the SAME truncated table the fit looped over. */
   private def zyCheckpoint(zy: DataFrame): DataFrame =
     graft.functions.ScopedCache.checkpoint("q215.zyt", zy)
 
@@ -2512,12 +2501,11 @@ object Curation extends QueryModule {
   private def lrQualityTrainFrom(d: DataFrame, feats: DataFrame): DataFrame = {
     val spark = d.sparkSession
     val nDocs = feats.count()
-    // lineage-truncated loop table (r17, the plattFit rationale): the
-    // cached feats still carry the whole featurizer plan, and each step's
-    // fresh 33-literal model forced full re-analysis per collect; the
-    // checkpoint makes the 5 step plans near-constant cost. Weights are
-    // bit-identical (same rows, same kernel); released before returning.
-    val t = feats.localCheckpoint()
+    // lineage-truncated loop table: the cached feats still carry the
+    // whole featurizer plan, which each step's fresh 33-literal model
+    // would re-analyse per collect; truncation makes the 5 step plans
+    // near-constant cost. Released before returning, failed or not.
+    val t = graft.functions.ScopedCache.truncate(feats, eager = true)
     try {
       val w = Array.fill(LrBiasDim + 1)(0.0)
       for (_ <- 1 to LrSteps) {
@@ -2702,18 +2690,11 @@ object Curation extends QueryModule {
     val spark = chunks.sparkSession
     // the chunk table is referenced THREE times (the count, the rank
     // side, the offsets side) and is a whole pack chain in production —
-    // materialize it ONCE so the corpus packs once (the doubly-
-    // referenced-subtree rule; r17 self-review). r17 optimization: an
-    // eager localCheckpoint instead of ScopedCache — same single
-    // materialization, but it also TRUNCATES LINEAGE, so the count and
-    // the final assembly plan over a 3-column leaf instead of re-running
-    // analyzer+optimizer over the whole upstream chain per reference
-    // (for q227 that chain is the entire CCNet pipeline + packer; the
-    // plattFit rationale applied to a composed query). r18: through the
-    // ScopedCache checkpoint registry — bounded generations, reuse of a
-    // semantically identical chunk table within a session, release on
-    // Bench settle — with cacheVariant back in its ADVICE-r16 role of
-    // keeping q222's and q227's generations on separate slots.
+    // truncated ONCE, so the corpus packs once and the count and the
+    // final assembly plan over a 3-column leaf instead of re-analysing
+    // the whole upstream chain per reference (for q227 that chain is the
+    // entire CCNet pipeline + packer). cacheVariant keeps q222's and
+    // q227's generations on separate registry slots.
     val cached = graft.functions.ScopedCache.checkpoint("q222.chunks", cacheVariant,
       chunks.select(col("source"), col("chunk_id"), col("chunk_tokens")))
     // dense global index without a global sort: per-source dense rank

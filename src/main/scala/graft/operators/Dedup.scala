@@ -351,21 +351,16 @@ object Dedup extends QueryModule {
     * all on the (node, label) table — at 100 TB these shuffle on node id
     * like any keyed aggregate, and the iteration count stays logarithmic
     * in the largest cluster (measured in ScaleProbe). Each iteration
-    * localCheckpoints the label table to truncate lineage (on a real
-    * cluster this would be a reliable checkpoint dir); convergence is
-    * detected when the label sum — monotonically non-increasing because
-    * labels only ever take `least` — stops changing, and a bounded
-    * iteration count with a `require` turns a non-converging run into a
-    * loud failure instead of a silent wrong answer.
+    * truncates the label table's lineage through
+    * [[graft.functions.ScopedCache.iterate]] (a reliable checkpoint on a
+    * cluster with a checkpoint dir); convergence is detected when the
+    * label sum — monotonically non-increasing because labels only ever
+    * take `least` — stops changing, and a bounded iteration count with a
+    * `require` turns a non-converging run into a loud failure instead of
+    * a silent wrong answer.
     *
     * Returns (labels, iterations): labels = one (node, label) row per doc
     * that appears in ≥1 pair, label = min doc_id of its component. */
-  /** Release the cached blocks of a localCheckpoint'd label table once
-    * the FOLLOWING round is materialized (shared hygiene — see
-    * [[graft.functions.ScopedCache.releaseCheckpoint]]). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    graft.functions.ScopedCache.releaseCheckpoint(df)
-
   /** Convergence witness: sum of labels, in DecimalType(38,0) so the sum
     * cannot overflow Long even at 1e10 nodes x 1e10-sized doc ids (ANSI
     * mode would turn that overflow into a query-killing exception). Null
@@ -391,16 +386,12 @@ object Dedup extends QueryModule {
     // union carries the pair-producing subtree TWICE, and the pair
     // pipeline above this (shingle self-join + aggregate) is the most
     // expensive stage of q77/q78/q85 — evaluating it once halves the
-    // edge-materialization job
-    // r17 checkpointed this table outright; the driver then measured
-    // q129 −18% (VERDICT r17 #2): the fixtures take the union-find
-    // branch, where truncation buys nothing (two references, no loop)
-    // and costs an extra materialization job + row-object storage where
-    // the columnar cache sufficed. r18: columnar persist() + count (one
-    // job, pre-r17 shape) for the decision + small-graph path; ONLY the
-    // >cutoff propagation loop — where every round re-plans against the
-    // edge table — takes a localCheckpoint, read off the already-
-    // materialized cache (the plattFit rationale, now branch-scoped).
+    // edge-materialization job.
+    // The edge table is a columnar persist + count (one job) for the
+    // size decision and the union-find branch, where truncation buys
+    // nothing (two references, no loop); only the >cutoff propagation
+    // loop, which re-plans against the edge table every round, truncates
+    // it, reading off the already-materialized cache.
     val edges = pairs.select(explode(array(
         struct(col("doc_a").as("u"), col("doc_b").as("v")),
         struct(col("doc_b").as("u"), col("doc_a").as("v")))).as("e"))
@@ -411,47 +402,47 @@ object Dedup extends QueryModule {
       // convergence action previously paid the same materialization
       val nEdges = edges.count()
       if (nEdges <= smallCutoff) return (unionFindLabels(edges), 0)
-      val ce = edges.localCheckpoint()
+      val ce = graft.functions.ScopedCache.truncate(edges, eager = true)
       try {
         // init = one propagation step folded in: label(n) = min(n, neighbors)
-        // (every node appears as `u` because edges are bidirected)
-        var labels = ce.groupBy(col("u"))
+        // (every node appears as `u` because edges are bidirected).
+        // Lazy truncation throughout: each generation's label-sum action
+        // both materializes it and truncates its lineage in ONE job (an
+        // eager truncation would spend a second job per round).
+        val init = graft.functions.ScopedCache.truncate(ce.groupBy(col("u"))
           .agg(min(col("v")).as("nbr_min"))
-          .select(col("u").as("node"), least(col("u"), col("nbr_min")).as("label"))
-          .localCheckpoint(eager = false)
-        var prevSum = labelSum(labels)
-        if (prevSum == null) return (labels, 0)
-        var iters = 0
+          .select(col("u").as("node"), least(col("u"), col("nbr_min")).as("label")),
+          eager = false)
+        var prevSum = try labelSum(init)
+          catch { case t: Throwable => graft.functions.ScopedCache.releaseCheckpoint(init); throw t }
+        if (prevSum == null) return (init, 0)
         var converged = false
-        while (!converged && iters < maxIters) {
+        val (labels, iters) = graft.functions.ScopedCache.iterate(init, maxIters,
+            eager = false)({ cur =>
           val nbrMin = ce
-            .join(labels.select(col("node").as("v"), col("label").as("vl")), "v")
+            .join(cur.select(col("node").as("v"), col("label").as("vl")), "v")
             .groupBy(col("u")).agg(min(col("vl")).as("nbr_min"))
             .select(col("u").as("node"), col("nbr_min"))
-          val l1 = labels.join(nbrMin, Seq("node"), "left")
+          val l1 = cur.join(nbrMin, Seq("node"), "left")
             .select(col("node"),
               least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
           // pointer jump: label(n) <- min(label(n), label(label(n))). Every
           // label value is a node id (init = node ids, updates = mins of
           // labels), so the inner self-join is total.
           val jump = l1.select(col("node").as("jnode"), col("label").as("jlabel"))
-          // lazy checkpoint: the convergence-sum action right below both
-          // materializes the round and truncates its lineage in ONE job
-          // (an eager checkpoint would spend a second job per round)
-          val next = l1.join(jump, l1("label") === jump("jnode"))
-            .select(col("node"), least(col("label"), col("jlabel")).as("label"))
-            .localCheckpoint(eager = false)
+          Some(l1.join(jump, l1("label") === jump("jnode"))
+            .select(col("node"), least(col("label"), col("jlabel")).as("label")))
+        }, { next =>
           val s = labelSum(next)
           converged = s.compareTo(prevSum) == 0
           prevSum = s
-          releaseCheckpoint(labels) // next is materialized; prev blocks are dead
-          labels = next
-          iters += 1
-        }
+          converged
+        })
+        if (!converged) graft.functions.ScopedCache.releaseCheckpoint(labels)
         require(converged,
           s"near-dup label propagation did not converge in $maxIters iterations")
         (labels, iters)
-      } finally releaseCheckpoint(ce)
+      } finally graft.functions.ScopedCache.releaseCheckpoint(ce)
     } finally edges.unpersist(blocking = false)
   }
 
@@ -1467,14 +1458,11 @@ object Dedup extends QueryModule {
     * agreement on exact duplicates and the error on partial overlaps). */
   private[graft] def minhashEstimateErrorOf(docs: DataFrame,
       maxBucket: Int = MaxBandBucket): DataFrame = {
-    // r17: checkpoint the multiply-referenced shingle front (the q217
-    // rationale — referenced ×3 through the audit's one action): same
-    // single materialization, every reference a narrow leaf. sigs/cand
-    // stay on their q73 ScopedCache slots: the LSH hot-gate anti-join
-    // lives in the candidate build plan, and PlanSpec audits it through
-    // the InMemoryRelation (a checkpoint would hide it — and the
-    // A/B read flat for those two anyway; the shingle explode is the
-    // re-analyzed chain that cost).
+    // the shingle front is referenced ×3 through the audit's one action,
+    // so it is truncated: one materialization, every reference a narrow
+    // leaf. sigs/cand stay on their q73 persist slots: the LSH hot-gate
+    // anti-join lives in the candidate build plan, and PlanSpec audits it
+    // through the InMemoryRelation, which a checkpoint would hide.
     val (sigs, cand) = lshCandidates(docs, maxBucket)
     val sh = graft.functions.ScopedCache.checkpoint("q179.shingles",
       docs.select(col("doc_id"),
@@ -1617,17 +1605,11 @@ object Dedup extends QueryModule {
   /** DataFrame-level core (testable on constructed corpora). */
   private[graft] def lshGeometryCardOf(docs: DataFrame,
       maxBucket: Int = MaxBandBucket): DataFrame = {
-    // r17: eager localCheckpoint instead of the q73/q179 ScopedCache
-    // slots — the card references the signature table from ~8 branches
-    // (3 banded explodes + 2 exact-side joins per geometry) and the
-    // shingle table from 6, so with the pins the card's single action
-    // still re-ran analyzer work over the full signature/shingle chains
-    // per reference (~2.1 s of build+plan time measured at sf0.1).
-    // Checkpoints keep the one-materialization contract and make every
-    // reference a 2-column leaf. Same rows → same card (the q222
-    // precedent). r18: via the ScopedCache checkpoint registry (bounded
-    // generations, reuse, Bench-settle release, auditable sources —
-    // these are corpus-sized tables, see the storage policy note).
+    // the card references the signature table from ~8 branches (3 banded
+    // explodes + 2 exact-side joins per geometry) and the shingle table
+    // from 6; truncating both keeps one materialization each and makes
+    // every reference a 2-column leaf instead of a re-analysis of the
+    // full signature/shingle chain. Same rows → same card.
     val sigs = graft.functions.ScopedCache.checkpoint("q217.sigs",
       signatures(docs))
     val sh = graft.functions.ScopedCache.checkpoint("q179.shingles",
@@ -2753,16 +2735,11 @@ object Dedup extends QueryModule {
       bsh: DataFrame, bLabels: DataFrame, delta: DataFrame): DataFrame = {
     // one keyed projection, cached: both the full roster (dAll) and the
     // batch keep-first read it, so each delta text is sha-hashed ONCE
-    // r17: the six admission-tail stage tables below are eager
-    // checkpoints instead of ScopedCache pins (the q217/q160
-    // rationale): each is referenced by 2-3 downstream branches of the
-    // one admission action, and the pins left every reference
-    // re-analyzing the whole stacked chain. Materialize-once is
-    // unchanged (each checkpoint reads its predecessors). r18: through
-    // the ScopedCache checkpoint registry — bounded generations,
-    // cross-invocation reuse, Bench-settle release, auditable source
-    // plans (ADVICE r17), deployment-gated storage (delta-proportional
-    // tables, but dsh is shingle-exploded — see the storage policy note).
+    // the six admission-tail stage tables below are registry
+    // checkpoints: each is referenced by 2-3 downstream branches of the
+    // one admission action, so truncation spares every reference a
+    // re-analysis of the whole stacked chain; each still materializes
+    // once (each checkpoint reads its predecessors).
     // one registry FAMILY per stage (variants are for alternating
     // corpora, not for distinct stages — 6 stages would overflow the
     // family's MaxVariantsPerFamily LRU and thrash)

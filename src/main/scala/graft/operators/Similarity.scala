@@ -402,11 +402,11 @@ object Similarity extends QueryModule {
     * corpus passes ONCE per iteration through a narrow
     * assign-via-broadcast + per-(cluster,dim) partial aggregate — the
     * textbook distributed Lloyd shape — plus one final slim accounting
-    * pass (iters+1 corpus scans total). Per-iteration eager
-    * `localCheckpoint` truncates lineage so the plan does not deepen
-    * with the iteration count, and each superseded round's blocks are
-    * released immediately; nothing but the k-row model is ever on the
-    * driver side of a broadcast. */
+    * pass (iters+1 corpus scans total). Each round's model is truncated
+    * eagerly by [[graft.functions.ScopedCache.iterate]], so the plan does
+    * not deepen with the iteration count and each superseded round's
+    * blocks are released immediately; nothing but the k-row model is ever
+    * on the driver side of a broadcast. */
   def kmeansTrain(spark: SparkSession, dir: String): DataFrame =
     kmeansTrainOf(Tables.embeddings(spark, dir))
 
@@ -465,25 +465,19 @@ object Similarity extends QueryModule {
     val e = kmVectors(emb)
     // init = the k lowest vec_ids' vectors (TakeOrdered, never a global
     // sort); ids need not be dense or zero-based
-    var cents = e.orderBy(col("vec_id")).limit(k)
+    val init = e.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id").as("cluster"), col("v").as("cv"))
-    var prev: DataFrame = null
-    for (_ <- 1 to iters) {
-      // eager checkpoint: materializes this round's k×dim model now (the
-      // same one corpus pass it would cost lazily) so the PREVIOUS
-      // round's dead blocks can be released immediately instead of
-      // accumulating until GC (q77's loop hygiene)
-      cents = kmAssign(e, cents, carryVector = true)
+    // eager truncation: each round's k×dim model is materialized by the
+    // same one corpus pass it would cost lazily, so the previous round's
+    // blocks are released at once
+    graft.functions.ScopedCache.iterate(init, iters) { cents =>
+      Some(kmAssign(e, cents, carryVector = true)
         .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cluster")).pivot("pos", (0 until KmeansDim).map(_.toString))
         .agg(round(avg(col("x")), 6))
         .select(col("cluster"),
-          array((0 until KmeansDim).map(i => col(s"`$i`")): _*).as("cv"))
-        .localCheckpoint()
-      if (prev != null) graft.functions.ScopedCache.releaseCheckpoint(prev)
-      prev = cents
-    }
-    cents
+          array((0 until KmeansDim).map(i => col(s"`$i`")): _*).as("cv")))
+    }._1
   }
 
   /** DataFrame-level core (ScaleProbe feeds enlarged inputs). Requires
@@ -744,22 +738,17 @@ object Similarity extends QueryModule {
     val e2 = pqSubvectors(emb)
     // init = the PqK lowest vec_ids' sub-vectors in every block
     val initIds = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(PqK)
-    var model = e2.join(broadcast(initIds), Seq("vec_id"))
+    val init = e2.join(broadcast(initIds), Seq("vec_id"))
       .select(col("block"), col("vec_id").as("cluster"), col("sv").as("cv"))
-    var prev: DataFrame = null
-    for (_ <- 1 to PqIters) {
-      model = pqAssign(e2, model, carryVector = true)
+    graft.functions.ScopedCache.iterate(init, PqIters) { model =>
+      Some(pqAssign(e2, model, carryVector = true)
         .select(col("block"), col("cluster"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("block"), col("cluster"))
         .pivot("pos", (0 until PqBlockDim).map(_.toString))
         .agg(round(avg(col("x")), 6))
         .select(col("block"), col("cluster"),
-          array((0 until PqBlockDim).map(i => col(s"`$i`")): _*).as("cv"))
-        .localCheckpoint()
-      if (prev != null) graft.functions.ScopedCache.releaseCheckpoint(prev)
-      prev = model
-    }
-    model
+          array((0 until PqBlockDim).map(i => col(s"`$i`")): _*).as("cv")))
+    }._1
   }
 
   /** DataFrame-level core. Requires dim = [[PqBlocks]]×[[PqBlockDim]]. */
@@ -1672,9 +1661,9 @@ object Similarity extends QueryModule {
     * encode-only job over the new data (two broadcast joins against
     * model-sized tables) and a full retrain over the whole corpus. */
   private[graft] def writeIvfPqDeltaIndex(emb: DataFrame, base: String): Unit = {
-    // r18: the two quantizer chains overlap from two driver threads —
-    // the writeIvfPqIndex rationale (guide §2.6) applied to the delta
-    // build; each chain trains its model, writes it, then splits ONE
+    // the two quantizer chains overlap from two driver threads (the
+    // writeIvfPqIndex rationale); each chain trains its model, writes it,
+    // then splits ONE
     // assignment pass per quantizer over the FULL corpus (both segments
     // use the same frozen base-trained models, so assigning base and
     // batch separately would scan and broadcast-join twice for the
@@ -1685,10 +1674,11 @@ object Similarity extends QueryModule {
     import scala.concurrent.ExecutionContext.Implicits.global
     val isBatch = pmod(col("vec_id"), lit(DeltaSplitMod)) === 0L
     def segmentPair(baseName: String, deltaName: String, all: DataFrame): Unit = {
-      val a = all.localCheckpoint()
-      a.filter(!isBatch).write.mode("overwrite").parquet(s"$base/$baseName")
-      a.filter(isBatch).write.mode("overwrite").parquet(s"$base/$deltaName")
-      graft.functions.ScopedCache.releaseCheckpoint(a)
+      val a = graft.functions.ScopedCache.truncate(all, eager = true)
+      try {
+        a.filter(!isBatch).write.mode("overwrite").parquet(s"$base/$baseName")
+        a.filter(isBatch).write.mode("overwrite").parquet(s"$base/$deltaName")
+      } finally graft.functions.ScopedCache.releaseCheckpoint(a)
     }
     val fCell = Future {
       val cellModel = kmeansModelOf(baseSide(emb))

@@ -1416,10 +1416,11 @@ object TextOps extends QueryModule {
     * (the model — the only driver state, 3 strings + 2 longs per
     * round), one pure-map merge application (the codegen'd
     * `graft_bpe_merge` kernel — no explode, no shuffle, no window), and
-    * one distinct-token count. `localCheckpoint` truncates lineage each
-    * round (the q77/q100 iterative-state pattern) so round R's plan
-    * never re-derives rounds 1..R−1; superseded checkpoints release
-    * their blocks eagerly. At 100 TB each round is two corpus scans
+    * one distinct-token count. [[graft.functions.ScopedCache.iterate]]
+    * truncates lineage each round (the q77/q100 iterative-state pattern)
+    * so round R's plan never re-derives rounds 1..R−1; a superseded
+    * generation releases its blocks eagerly, and a failed round releases
+    * the live one. At 100 TB each round is two corpus scans
     * (recount + re-apply) — embarrassingly scalable; a production run
     * would also write each round's sequences to the artifact store, and
     * the serving path ([[bpeEncode]]) replays the R merges as R chained
@@ -1430,44 +1431,29 @@ object TextOps extends QueryModule {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val session = spark
     import session.implicits._
-    var seq = d.select(col("doc_id"), toks.as("t")).localCheckpoint()
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long, Long)]
-    var k = 1
-    var exhausted = false
-    // the live corpus-sized checkpoint is ALWAYS `seq` (reassigned the
-    // moment its predecessor is released), so the failure path below can
-    // release exactly one handle: if any round's collect()/count()
-    // throws, the current sequence generation is freed eagerly instead
-    // of waiting on ContextCleaner GC (ADVICE r15).
-    try {
-      while (k <= rounds && !exhausted) {
-        val top = bpePairCounts(seq)
-          .orderBy(col("pair_cnt").desc, col("l"), col("r")).limit(1).collect()
-        if (top.isEmpty) exhausted = true
-        else {
-          val l = top(0).getString(0)
-          val r = top(0).getString(1)
-          val cnt = top(0).getLong(2)
+    var learned: (String, String, Long) = null
+    val (fin, _) = graft.functions.ScopedCache.iterate(
+      graft.functions.ScopedCache.truncate(
+        d.select(col("doc_id"), toks.as("t")), eager = true), rounds)({ seq =>
+      bpePairCounts(seq).orderBy(col("pair_cnt").desc, col("l"), col("r"))
+        .limit(1).collect().headOption.map { top =>
+          learned = (top.getString(0), top.getString(1), top.getLong(2))
           // the learned pair rides back in as a broadcast 1-row literal
           // (not a string-interpolated expression: token text needs no
           // escaping this way), coalesce unused here because the row is
           // known non-empty
-          val next = seq.crossJoin(broadcast(Seq((l, r)).toDF("l", "r")))
+          seq.crossJoin(broadcast(Seq((learned._1, learned._2)).toDF("l", "r")))
             .select(col("doc_id"), expr("graft_bpe_merge(t, l, r)").as("t"))
-            .localCheckpoint()
-          graft.functions.ScopedCache.releaseCheckpoint(seq)
-          seq = next
-          val vocab = seq.select(explode(col("t")).as("tok")).distinct().count()
-          out += ((k, l, r, l + " " + r, cnt, vocab))
-          k += 1
         }
-      }
-    } catch { case t: Throwable =>
-      graft.functions.ScopedCache.releaseCheckpoint(seq)
-      throw t
-    }
-    (out.toSeq, seq)
+    }, { seq =>
+      val (l, r, cnt) = learned
+      val vocab = seq.select(explode(col("t")).as("tok")).distinct().count()
+      out += ((out.size + 1, l, r, l + " " + r, cnt, vocab))
+      false
+    })
+    (out.toSeq, fin)
   }
 
   /** Serving-side tokenizer: replay a trained merge table (in round
@@ -1748,16 +1734,15 @@ object TextOps extends QueryModule {
     * in-plan and counts the final state directly. The vocab is
     * vocabulary-sized, so it is materialized EAGERLY here and the
     * trainer's corpus-sized final checkpoint released before returning
-    * (ADVICE r15 — the "terminal model is not released" exemption is
-    * for k-row models, not corpus-sized sequence tables). */
+    * (the "terminal model is not released" exemption is for k-row
+    * models, not corpus-sized sequence tables). */
   def bpeVocabOf(d: DataFrame): DataFrame = {
     val spark = d.sparkSession
     val session = spark
     import session.implicits._
     val (_, fin) = bpeTrainState(d)
-    // finally: the corpus-sized checkpoint must release even when the
-    // collect itself fails (the same failure path the trainer's loop
-    // guards — r16 review)
+    // finally: the corpus-sized checkpoint is released even when the
+    // collect itself fails
     val collected =
       try vocabFromSeq(fin).collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       finally graft.functions.ScopedCache.releaseCheckpoint(fin)

@@ -81,7 +81,7 @@ object OptProbe {
           println(f"[opt] plattFit-loop #$i            ${(System.nanoTime() - t0) / 1e9}%7.3f s  -> $ab")
           // lineage-truncated twin: plan per step over a 5-node tree
           t0 = System.nanoTime()
-          val zyC = zy.localCheckpoint()
+          val zyC = graft.functions.ScopedCache.truncate(zy, eager = true)
           val ab2 = Curation.plattFit(zyC)
           println(f"[opt] plattFit-ckpt #$i            ${(System.nanoTime() - t0) / 1e9}%7.3f s  -> $ab2 equal=${ab == ab2}")
           graft.functions.ScopedCache.releaseCheckpoint(zyC)

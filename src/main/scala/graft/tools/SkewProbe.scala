@@ -130,9 +130,10 @@ object SkewProbe {
     // output partitioning satisfies the join's hash(v) requirement after
     // the rename, the shuffle-sort-join pattern never forms, and AQE has
     // no skewed shuffle stage to split
-    val labels0 = edges.groupBy($"u").agg(min($"v").as("nbr_min"))
-      .select($"u".as("node"), least($"u", $"nbr_min").as("label"))
-      .localCheckpoint()
+    val labels0 = graft.functions.ScopedCache.truncate(
+      edges.groupBy($"u").agg(min($"v").as("nbr_min"))
+        .select($"u".as("node"), least($"u", $"nbr_min").as("label")),
+      eager = true)
     def starRoundDf(): DataFrame =
       edges.hint("merge")
         .join(labels0.select($"node".as("v"), $"label".as("vl")).hint("merge"), "v")
