@@ -93,16 +93,39 @@ object ScopedCache {
     if (!e.truncated) release(e.handle, blocking = false)
 
   /** Cut `df`'s lineage under the deployment policy above. `eager`
-    * materializes it now; otherwise the first action on the result does. */
+    * materializes it now; otherwise the first action on the result does.
+    * A local truncation or a persist is marked lazily and materialized by
+    * one action on the handle's root (as many jobs as
+    * `Dataset.localCheckpoint(eager = true)` runs), and released if that
+    * action throws: a failed truncation leaves no marked RDD behind. A
+    * reliable checkpoint persists nothing, so Spark's own eager write (one
+    * job; an action before it would compute the plan twice) has nothing
+    * to leave behind. */
   def truncate(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    if (sc.isLocal) df.localCheckpoint(eager)
-    else if (sc.getCheckpointDir.isDefined) df.checkpoint(eager)
+    if (!sc.isLocal && sc.getCheckpointDir.isDefined) df.checkpoint(eager)
     else {
-      val p = df.persist()
-      if (eager) p.count()
-      p
+      val t = if (sc.isLocal) df.localCheckpoint(eager = false) else df.persist()
+      if (eager) try t.queryExecution.analyzed match {
+        case r: LogicalRDD if sc.isLocal => r.rdd.count()
+        case _ => t.count()
+      } catch { case e: Throwable =>
+        release(t, blocking = true)
+        throw e
+      }
+      t
     }
+  }
+
+  // family -> rounds of the last loop of that family that finished
+  private val lastRounds = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+
+  /** The rounds of the last [[iterate]] run per loop family since the
+    * previous call, then forgets them (a profiler reads one query's). */
+  def takeLoopRounds(): Map[String, Int] = lastRounds.synchronized {
+    val out = lastRounds.toMap
+    lastRounds.clear()
+    out
   }
 
   /** Truncated fixed-point loop. Generation 0 is `init`, a truncation or
@@ -117,8 +140,9 @@ object ScopedCache {
     * a truncation or `settled` throws, the live generation is released
     * before the exception propagates. Stops after `maxIters` rounds, on
     * None, or when `settled` returns true; returns the live generation
-    * (the caller owns it) and the number of rounds run. */
-  def iterate(init: DataFrame, maxIters: Int, eager: Boolean = true)(
+    * (the caller owns it) and the number of rounds run, which is also
+    * kept as the last run of `family` ([[takeLoopRounds]]). */
+  def iterate(family: String, init: DataFrame, maxIters: Int, eager: Boolean = true)(
       step: DataFrame => Option[DataFrame],
       settled: DataFrame => Boolean = _ => false): (DataFrame, Int) = {
     var live = init
@@ -139,6 +163,7 @@ object ScopedCache {
       releaseCheckpoint(live)
       throw t
     }
+    lastRounds.synchronized(lastRounds(family) = rounds)
     (live, rounds)
   }
 

@@ -496,7 +496,7 @@ object Analytics extends QueryModule {
     // the plain exact percentile is the right shape for a near-unique
     // column. The range-bucketed refinement ([[p25PriceBucketedOf]])
     // computes the identical bits with bounded state but measured a
-    // wash at bench scale (P25Probe, BASELINE.md), so plain ships here
+    // wash at bench scale (BASELINE.md), so plain ships here
     // and bucketed + q18's sketch remain the 100 TB escape hatches.
     val price = li.groupBy(col("l_returnflag"))
       .agg(expr("percentile(l_extendedprice, 0.25)").as("p25_price"))
@@ -516,10 +516,11 @@ object Analytics extends QueryModule {
       |ORDER BY l_returnflag NULLS FIRST""".stripMargin
 
   /** Exact p25 of a near-unique column via range-bucketed pre-aggregation
-    * — the candidate replacement for q35's plain-percentile branch
-    * (measured against it in [[graft.tools.P25Probe]]; BASELINE.md
-    * records the outcome). Shape: (1) per-group (min, max, count) —
-    * tiny; (2) histogram count per (group, range-bin) — a codegen'd
+    * — the candidate replacement for q35's plain-percentile branch. It
+    * must stay bit-identical to the plain exact `percentile` (asserted in
+    * SemanticsSpec); BASELINE.md records the timing. Shape:
+    * (1) per-group (min, max, count) — tiny; (2) histogram count per
+    * (group, range-bin) — a codegen'd
     * hash aggregate whose shuffle carries ≤ [[P25Bins]] rows per group
     * instead of a per-group value buffer; (3) locate the two bins
     * straddling the p25 order statistics from the cumulative histogram;

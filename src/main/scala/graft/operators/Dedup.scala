@@ -417,7 +417,7 @@ object Dedup extends QueryModule {
           catch { case t: Throwable => graft.functions.ScopedCache.releaseCheckpoint(init); throw t }
         if (prevSum == null) return (init, 0)
         var converged = false
-        val (labels, iters) = graft.functions.ScopedCache.iterate(init, maxIters,
+        val (labels, iters) = graft.functions.ScopedCache.iterate("dedup.labels", init, maxIters,
             eager = false)({ cur =>
           val nbrMin = ce
             .join(cur.select(col("node").as("v"), col("label").as("vl")), "v")
@@ -886,8 +886,7 @@ object Dedup extends QueryModule {
     writeNeardupArtifactOf(Tables.documents(spark, dir), base)
 
   /** The build's shingle stage: DF-gated (doc_id, sh, df) universe
-    * written as parquet. Shared with [[graft.tools.BuildProbe]]'s stage
-    * breakdown so the probe times the exact stage the build runs.
+    * written as parquet.
     * Identical gate semantics to [[gatedShingles]] minus the in-memory
     * cache (the parquet table IS the materialization); the gate is an
     * inner join against the ≤-cap side of the SAME df aggregate the
@@ -896,7 +895,7 @@ object Dedup extends QueryModule {
     * crossing probe then reads df off the candidate rows instead of
     * re-scanning + re-aggregating the whole universe, and any consumer
     * that only wants (doc_id, sh) prunes the column at the scan. */
-  private[graft] def writeGatedShinglesProbe(docs: DataFrame, path: String): Unit = {
+  private[graft] def writeGatedShingles(docs: DataFrame, path: String): Unit = {
     val shAll = shingled(docs)
       .select(col("doc_id"), explode(col("shingles")).as("sh"))
     val cold = shAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
@@ -905,8 +904,9 @@ object Dedup extends QueryModule {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** DataFrame-level build body — [[graft.tools.BuildProbe]] drives it on
-    * replicated corpora to measure build-cost growth.
+  /** DataFrame-level build body: it takes the corpus, not a fixture dir,
+    * so a replicated corpus measures build-cost growth through the exact
+    * stages the q129 build runs.
     *
     * Stage persistence discipline (the r11 ≤4 s ask): the gated shingle
     * universe — measured at over half the build's cost when derived
@@ -922,29 +922,10 @@ object Dedup extends QueryModule {
     // scheduler interleaves their stages instead of paying two full job
     // latencies back to back, and the BlockManager's per-block locking
     // dedupes the cache's first materialization between them
-    val fSurv = scala.concurrent.Future {
-      survivors.drop("text").write.mode("overwrite").parquet(s"$base/survivors")
-    }(scala.concurrent.ExecutionContext.global)
-    // if the main-thread write fails, STILL await the sibling before
-    // propagating: an escaping exception triggers ArtifactStore's staging
-    // cleanup, which must not race a write still in flight (ADVICE r12).
-    // Explicit catch Throwable — Try's NonFatal would let an
-    // InterruptedException escape before the sibling is awaited.
-    val shinglesFailure =
-      try { writeGatedShinglesProbe(
-        survivors.select(col("doc_id"), col("text")), s"$base/surv_shingles"); None }
-      catch { case t: Throwable => Some(t) }
-    val survFailure =
-      try { scala.concurrent.Await.result(
-        fSurv, scala.concurrent.duration.Duration.Inf); None }
-      catch { case t: Throwable => Some(t) }
-    // when BOTH writes fail, surface the second failure as suppressed on
-    // the first instead of discarding its diagnostics (ADVICE r13)
-    (shinglesFailure orElse survFailure).foreach { t =>
-      (shinglesFailure.toSeq ++ survFailure.toSeq).filter(_ ne t)
-        .foreach(t.addSuppressed)
-      throw t
-    }
+    graft.functions.Concurrent.runAll(
+      () => writeGatedShingles(
+        survivors.select(col("doc_id"), col("text")), s"$base/surv_shingles"),
+      () => survivors.drop("text").write.mode("overwrite").parquet(s"$base/survivors"))
     val gatedSurv = spark.read.parquet(s"$base/surv_shingles")
     // overlap the label stage's duplicate-gate prefix (corpus sha2 scan,
     // member map, candidate gate rows — inputs: corpus + survivor cache +
@@ -3098,32 +3079,13 @@ object Dedup extends QueryModule {
     // those caches / the written pairs, are mutually independent, and
     // overlap — four job latencies become roughly one
     pairsU.write.mode("overwrite").parquet(s"$out/bpairs")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val writes = Seq(
-      Future(bsvU.write.mode("overwrite").parquet(s"$out/bsv")),
-      Future(hotU.write.mode("overwrite").parquet(s"$out/hot")),
-      Future(bshU.write.mode("overwrite").parquet(s"$out/bsh")),
-      Future(clusterLabels(spark.read.parquet(s"$out/bpairs")
+    graft.functions.Concurrent.runAll(
+      () => bsvU.write.mode("overwrite").parquet(s"$out/bsv"),
+      () => hotU.write.mode("overwrite").parquet(s"$out/hot"),
+      () => bshU.write.mode("overwrite").parquet(s"$out/bsh"),
+      () => clusterLabels(spark.read.parquet(s"$out/bpairs")
           .select(col("doc_a"), col("doc_b")))._1
-        .write.mode("overwrite").parquet(s"$out/blabels")))
-    // await EVERY write before propagating any failure: an exception
-    // escaping mid-await hands ArtifactStore a staging dir with sibling
-    // Spark jobs still writing into it (ADVICE r12). Explicit catch
-    // Throwable, not Try — Try's NonFatal would let an
-    // InterruptedException (harness cancellation) escape mid-await,
-    // reopening the same race.
-    val failures = writes.flatMap { f =>
-      try { Await.result(f, Duration.Inf); None }
-      catch { case t: Throwable => Some(t) }
-    }
-    // surface sibling failures as suppressed instead of discarding their
-    // diagnostics (ADVICE r13)
-    failures.headOption.foreach { t =>
-      failures.drop(1).foreach(t.addSuppressed)
-      throw t
-    }
+        .write.mode("overwrite").parquet(s"$out/blabels"))
   }
 
   // oracle: the fresh q129 build's SQL VERBATIM over the union corpus —

@@ -470,7 +470,7 @@ object Similarity extends QueryModule {
     // eager truncation: each round's k×dim model is materialized by the
     // same one corpus pass it would cost lazily, so the previous round's
     // blocks are released at once
-    graft.functions.ScopedCache.iterate(init, iters) { cents =>
+    graft.functions.ScopedCache.iterate("similarity.kmeans", init, iters) { cents =>
       Some(kmAssign(e, cents, carryVector = true)
         .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
         .groupBy(col("cluster")).pivot("pos", (0 until KmeansDim).map(_.toString))
@@ -740,7 +740,7 @@ object Similarity extends QueryModule {
     val initIds = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(PqK)
     val init = e2.join(broadcast(initIds), Seq("vec_id"))
       .select(col("block"), col("vec_id").as("cluster"), col("sv").as("cv"))
-    graft.functions.ScopedCache.iterate(init, PqIters) { model =>
+    graft.functions.ScopedCache.iterate("similarity.pq", init, PqIters) { model =>
       Some(pqAssign(e2, model, carryVector = true)
         .select(col("block"), col("cluster"), posexplode(col("sv")).as(Seq("pos", "x")))
         .groupBy(col("block"), col("cluster"))
@@ -1234,21 +1234,17 @@ object Similarity extends QueryModule {
     // jobs are deterministic and write disjoint directories; the models
     // and codes are bit-identical to the sequential build (same lineages,
     // just submitted concurrently — probe-asserted, oracle-green).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fCell = Future {
-      val cellModel = kmeansModelOf(emb)
-      cellModel.write.mode("overwrite").parquet(s"$base/centroids")
-      segmentCells(emb, cellModel).write.mode("overwrite").parquet(s"$base/cells")
-    }
-    val fPq = Future {
-      val pqModel = pqModelOf(emb)
-      pqModel.write.mode("overwrite").parquet(s"$base/pq_codebook")
-      segmentCodes(emb, pqModel).write.mode("overwrite").parquet(s"$base/codes")
-    }
-    Await.result(fCell, Duration.Inf)
-    Await.result(fPq, Duration.Inf)
+    graft.functions.Concurrent.runAll(
+      () => {
+        val cellModel = kmeansModelOf(emb)
+        cellModel.write.mode("overwrite").parquet(s"$base/centroids")
+        segmentCells(emb, cellModel).write.mode("overwrite").parquet(s"$base/cells")
+      },
+      () => {
+        val pqModel = pqModelOf(emb)
+        pqModel.write.mode("overwrite").parquet(s"$base/pq_codebook")
+        segmentCodes(emb, pqModel).write.mode("overwrite").parquet(s"$base/codes")
+      })
   }
 
   /** Build the index for `dir` unless a complete, signature-valid one is
@@ -1669,9 +1665,6 @@ object Similarity extends QueryModule {
     // batch separately would scan and broadcast-join twice for the
     // identical result) into the immutable segment pair at write time
     // from the materialized assignment.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
     val isBatch = pmod(col("vec_id"), lit(DeltaSplitMod)) === 0L
     def segmentPair(baseName: String, deltaName: String, all: DataFrame): Unit = {
       val a = graft.functions.ScopedCache.truncate(all, eager = true)
@@ -1680,18 +1673,17 @@ object Similarity extends QueryModule {
         a.filter(isBatch).write.mode("overwrite").parquet(s"$base/$deltaName")
       } finally graft.functions.ScopedCache.releaseCheckpoint(a)
     }
-    val fCell = Future {
-      val cellModel = kmeansModelOf(baseSide(emb))
-      cellModel.write.mode("overwrite").parquet(s"$base/centroids")
-      segmentPair("cells", "cells_delta", segmentCells(emb, cellModel))
-    }
-    val fPq = Future {
-      val pqModel = pqModelOf(baseSide(emb))
-      pqModel.write.mode("overwrite").parquet(s"$base/pq_codebook")
-      segmentPair("codes", "codes_delta", segmentCodes(emb, pqModel))
-    }
-    Await.result(fCell, Duration.Inf)
-    Await.result(fPq, Duration.Inf)
+    graft.functions.Concurrent.runAll(
+      () => {
+        val cellModel = kmeansModelOf(baseSide(emb))
+        cellModel.write.mode("overwrite").parquet(s"$base/centroids")
+        segmentPair("cells", "cells_delta", segmentCells(emb, cellModel))
+      },
+      () => {
+        val pqModel = pqModelOf(baseSide(emb))
+        pqModel.write.mode("overwrite").parquet(s"$base/pq_codebook")
+        segmentPair("codes", "codes_delta", segmentCodes(emb, pqModel))
+      })
   }
 
   /** Append a batch of NEW vectors to an EXISTING index at `base`:

@@ -1434,7 +1434,7 @@ object TextOps extends QueryModule {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, Long, Long)]
     var learned: (String, String, Long) = null
-    val (fin, _) = graft.functions.ScopedCache.iterate(
+    val (fin, _) = graft.functions.ScopedCache.iterate("textops.bpe",
       graft.functions.ScopedCache.truncate(
         d.select(col("doc_id"), toks.as("t")), eager = true), rounds)({ seq =>
       bpePairCounts(seq).orderBy(col("pair_cnt").desc, col("l"), col("r"))

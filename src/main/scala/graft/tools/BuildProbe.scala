@@ -10,8 +10,8 @@ import graft.sources.Tables
   * query-shape ScaleProbe does not cover. Times the end-to-end build on
   * N shifted copies of the sf corpus (doc/vec ids shifted per copy so
   * distinct-entity cardinality grows with the data, like a real larger
-  * corpus), plus a stage breakdown of the near-dup build at 1× so the
-  * expensive stage is measured, not guessed. Not part of the library
+  * corpus). Where one build's seconds go, stage by stage, is
+  * [[graft.tools.Profile]]'s job (q108, q129). Not part of the library
   * surface.
   *
   * Usage: runMain graft.tools.BuildProbe [sfDir] [copies] [probe...]
@@ -58,18 +58,13 @@ object BuildProbe {
       rec(new java.io.File(path))
     }
 
-    def timeWith(name: String, clear: Boolean)(f: => Long): Unit =
+    def time(name: String)(f: => Long): Unit =
       if (only.isEmpty || only.exists(name.startsWith)) {
-        if (clear) clearCaches()
+        clearCaches()
         val t0 = System.nanoTime()
         val n = f
         println(f"[build] $name%-34s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
       }
-
-    def time(name: String)(f: => Long): Unit = timeWith(name, clear = true)(f)
-    // stage timings are INCREMENTAL in build order (shared scoped
-    // caches), exactly like the real build body — no clearing between
-    def stage(name: String)(f: => Long): Unit = timeWith(name, clear = false)(f)
 
     // ---- near-dup artifact build (q129 shape), end to end -------------
     time(s"neardup_build_${copies}x") {
@@ -100,44 +95,6 @@ object BuildProbe {
       rmrf(base)
       graft.operators.Dedup.writeNeardupArtifactOf(dup, base)
       spark.read.parquet(s"$base/doc_labels").count()
-    }
-
-    // ---- near-dup build stage breakdown (1× semantics, any N) ---------
-    {
-      clearCaches()
-      val pairsPath = "/tmp/graft_probe_neardup_stage_pairs"
-      val docs = docsN
-      var survivors: DataFrame = null
-      var labels: DataFrame = null
-      stage(s"neardup_stage_survivors_${copies}x") {
-        survivors = graft.operators.Dedup.exactSurvivors(docs)
-        survivors.write.format("noop").mode("overwrite").save()
-        survivors.count()
-      }
-      val shinglesPath = "/tmp/graft_probe_neardup_stage_shingles"
-      var gatedSurv: DataFrame = null
-      stage(s"neardup_stage_shingles_${copies}x") {
-        // written then read back, like the real build body
-        graft.operators.Dedup.writeGatedShinglesProbe(
-          survivors.select(col("doc_id"), col("text")), shinglesPath)
-        gatedSurv = spark.read.parquet(shinglesPath)
-        gatedSurv.count()
-      }
-      stage(s"neardup_stage_pairs_${copies}x") {
-        graft.operators.Dedup.jaccardPairsFromGated(gatedSurv)
-          .write.mode("overwrite").parquet(pairsPath)
-        spark.read.parquet(pairsPath).count()
-      }
-      stage(s"neardup_stage_cluster_${copies}x") {
-        labels = graft.operators.Dedup.clusterLabels(
-          spark.read.parquet(pairsPath).select(col("doc_a"), col("doc_b")))._1
-        labels.count()
-      }
-      stage(s"neardup_stage_rawlabels_${copies}x") {
-        graft.operators.Dedup.rawLabelsViaSurvivors(docs, survivors, labels,
-            gatedSurv)
-          .count()
-      }
     }
 
     // ---- IVF-PQ index build (q108 shape), end to end ------------------

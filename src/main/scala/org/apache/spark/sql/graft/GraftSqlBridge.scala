@@ -10,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Building a DataFrame from a hand-constructed logical plan goes through
   * `Dataset.ofRows`, and appending a planner strategy at runtime goes
   * through `SparkSession.experimental` — both scoped `private[sql]` /
-  * classic-only. Everything else in graft stays outside Spark's
-  * namespace; this bridge exists so exactly two calls can cross it
+  * classic-only; waiting for the listener bus to drain is
+  * `private[spark]`. Everything else in graft stays outside Spark's
+  * namespace; this bridge exists so exactly these calls can cross it
   * (the standard pattern for Catalyst extension libraries).
   */
 object GraftSqlBridge {
@@ -49,4 +50,10 @@ object GraftSqlBridge {
         exp.extraOptimizations = exp.extraOptimizations :+ rule
     }
   }
+
+  /** Block until every listener has seen every event posted so far:
+    * listener events are delivered asynchronously, so a listener's totals
+    * for a finished action are complete only after this. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
 }

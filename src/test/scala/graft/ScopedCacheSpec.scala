@@ -4,9 +4,11 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,9 +16,10 @@ import graft.functions.ScopedCache
 
 /** The one cache and lineage-truncation policy (functions/ScopedCache):
   * registry reuse, replacement and LRU eviction, the `iterate` loop's
-  * release bookkeeping on success and failure, root-only release, and
-  * a source guard that keeps every truncation inside ScopedCache. Small
-  * constructed frames only. */
+  * release bookkeeping on success and failure and its round counts, an
+  * eager truncation's release on failure and its job count, root-only
+  * release, and a source guard that keeps every truncation inside
+  * ScopedCache. Small constructed frames only. */
 class ScopedCacheSpec extends AnyFunSuite with SparkSpec {
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -73,7 +76,7 @@ class ScopedCacheSpec extends AnyFunSuite with SparkSpec {
     for (eager <- Seq(true, false)) {
       val before = persistentIds
       val init = ScopedCache.truncate(frame(100), eager = true)
-      val (live, rounds) = ScopedCache.iterate(init, 5, eager)(
+      val (live, rounds) = ScopedCache.iterate("spec.loop", init, 5, eager)(
         g => Some(g.select((col("x") + 1).as("x"))),
         g => { g.count(); false })
       assert(rounds === 5)
@@ -83,14 +86,53 @@ class ScopedCacheSpec extends AnyFunSuite with SparkSpec {
       assert((persistentIds -- before).isEmpty)
     }
     // stop test and step exhaustion end the loop early
-    val (settled, settledAt) = ScopedCache.iterate(frame(3), 10)(
+    val (settled, settledAt) = ScopedCache.iterate("spec.loop", frame(3), 10)(
       g => Some(g.select((col("x") + 1).as("x"))), g => xs(g).head == 2)
     assert(settledAt === 2)
     ScopedCache.releaseCheckpoint(settled)
-    val (exhausted, exhaustedAt) = ScopedCache.iterate(frame(3), 10)(
+    val (exhausted, exhaustedAt) = ScopedCache.iterate("spec.loop", frame(3), 10)(
       g => if (xs(g).head < 4) Some(g.select((col("x") + 1).as("x"))) else None)
     assert(exhaustedAt === 4 && xs(exhausted) === Seq(4L, 5L, 6L))
     ScopedCache.releaseCheckpoint(exhausted)
+    // the last run of the family is kept until read, then forgotten
+    assert(ScopedCache.takeLoopRounds().get("spec.loop") === Some(4))
+    assert(ScopedCache.takeLoopRounds().get("spec.loop").isEmpty)
+  }
+
+  test("truncate: a failed eager truncation leaves no new persistent RDD") {
+    val before = persistentIds
+    val bad = frame(4).select(when(col("x") === 2, raise_error(lit("boom truncate")))
+      .otherwise(col("x")).as("x"))
+    val e = intercept[Exception](ScopedCache.truncate(bad, eager = true))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom truncate")))
+    assert((persistentIds -- before).isEmpty)
+  }
+
+  test("truncate: eager runs as many jobs as Dataset.localCheckpoint(eager = true)") {
+    val sc = spark.sparkContext
+    def jobsOf(truncation: => DataFrame): (Int, Seq[Long]) = {
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+      }
+      GraftSqlBridge.drainListenerBus(sc)
+      sc.addSparkListener(l)
+      val t = try truncation finally {
+        GraftSqlBridge.drainListenerBus(sc)
+        sc.removeSparkListener(l)
+      }
+      try (started.get, xs(t)) finally ScopedCache.releaseCheckpoint(t)
+    }
+    val plans = Seq[() => DataFrame](
+      () => frame(100).select((col("x") * 2).as("x")),
+      () => frame(100).groupBy((col("x") % 7).as("x")).agg(count(lit(1)).as("n")))
+    for ((plan, shuffles) <- plans.zip(Seq(false, true))) {
+      val (ours, rows) = jobsOf(ScopedCache.truncate(plan(), eager = true))
+      val (theirs, theirRows) = jobsOf(plan().localCheckpoint(eager = true))
+      assert(ours > 0 && ours === theirs, s"shuffle=$shuffles")
+      assert(rows === theirRows)
+    }
   }
 
   test("iterate: a round that throws leaves no generation pinned") {
@@ -104,7 +146,7 @@ class ScopedCacheSpec extends AnyFunSuite with SparkSpec {
       val before = persistentIds
       val init = ScopedCache.truncate(frame(2), eager = true)
       val e = intercept[Exception] {
-        ScopedCache.iterate(init, 5, eager)(
+        ScopedCache.iterate("spec.loop", init, 5, eager)(
           g =>
             if (eager) { boom(g).collect(); Some(g.select((col("x") + 1).as("x"))) }
             else Some(boom(g)),
