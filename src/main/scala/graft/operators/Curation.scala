@@ -1124,7 +1124,7 @@ object Curation extends QueryModule {
   def rejectionAudit(spark: SparkSession, dir: String): DataFrame =
     rejectionAuditOf(Tables.documents(spark, dir))
 
-  /** DataFrame-level core (ScaleProbe drives it on replicated corpora). */
+  /** DataFrame-level core: any `documents`-shaped frame. */
   private[graft] def rejectionAuditOf(docs: DataFrame): DataFrame = {
     val (quality, gatedq, sv, labels) = funnelPartsOf(docs)
     // keeper lookup keyed on the 32-byte content key with (id, key)
@@ -1609,7 +1609,7 @@ object Curation extends QueryModule {
   def classifierLift(spark: SparkSession, dir: String): DataFrame =
     classifierLiftOf(Tables.documents(spark, dir))
 
-  /** DataFrame-level core (ScaleProbe drives it on replicated corpora). */
+  /** DataFrame-level core: any `documents`-shaped frame. */
   private[graft] def classifierLiftOf(docs: DataFrame): DataFrame = {
     val cls = qualityClassifierOf(docs)
       .select(col("doc_id"), col("score"))

@@ -350,8 +350,8 @@ object Dedup extends QueryModule {
     * DataFrame-only: per iteration two equi-joins + one min-aggregate,
     * all on the (node, label) table — at 100 TB these shuffle on node id
     * like any keyed aggregate, and the iteration count stays logarithmic
-    * in the largest cluster (measured in ScaleProbe). Each iteration
-    * truncates the label table's lineage through
+    * in the largest cluster. Each iteration truncates the label table's
+    * lineage through
     * [[graft.functions.ScopedCache.iterate]] (a reliable checkpoint on a
     * cluster with a checkpoint dir); convergence is detected when the
     * label sum — monotonically non-increasing because labels only ever
@@ -2917,8 +2917,7 @@ object Dedup extends QueryModule {
     * invisibility oracle (fresh-build SQL, hash-green) plus the
     * SemanticsSpec bit-equality law certify the served generation IS the
     * fold's output. The fold's own cost stays observable: the first
-    * invocation per corpus state pays it (Bench's per-pass array), and
-    * [[graft.tools.BuildProbe]] measures it in isolation. */
+    * invocation per corpus state pays it (Bench's per-pass array). */
   def ensureNeardupCompacted(spark: SparkSession, dir: String): String = {
     val baseArt = ensureNeardupAppendBase(spark, dir)
     val delta = Tables.documents(spark, dir).select(col("doc_id"), col("text"))

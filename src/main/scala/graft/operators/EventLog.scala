@@ -353,8 +353,7 @@ object EventLog extends QueryModule {
   def rangeJoinNearbyOrders(spark: SparkSession, dir: String): DataFrame =
     rangeJoinNearbyOrdersOf(Tables.orders(spark, dir))
 
-  /** DataFrame-level core (ScaleProbe feeds enlarged inputs): expects
-    * `o_orderkey` and `o_orderdate`. */
+  /** DataFrame-level core: expects `o_orderkey` and `o_orderdate`. */
   def rangeJoinNearbyOrdersOf(orders: DataFrame): DataFrame = {
     val DayUs = 86400000000L
     // o_orderdate is TIMESTAMP_NTZ; the session timezone is pinned UTC, so

@@ -263,7 +263,7 @@ object Similarity extends QueryModule {
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfOf(Tables.embeddings(spark, dir))
 
-  /** DataFrame-level core (ScaleProbe feeds enlarged inputs). */
+  /** DataFrame-level core: any `(vec_id, embedding, label)` frame. */
   def annIvfOf(emb: DataFrame): DataFrame = {
     val e = normedOf(emb)
     // centroids[label] as array (per-dim rounded averages, order-fixed)
@@ -480,7 +480,7 @@ object Similarity extends QueryModule {
     }._1
   }
 
-  /** DataFrame-level core (ScaleProbe feeds enlarged inputs). Requires
+  /** DataFrame-level core. Requires
     * [[KmeansDim]]-dim vectors (the recompute pivot is dim-indexed, as
     * [[pqTrainOf]] requires blocks×blockDim). Empty clusters simply
     * vanish from the model — identically in the oracle. */
@@ -1691,7 +1691,7 @@ object Similarity extends QueryModule {
     * immutable segment pair (`cells_<suffix>`, `codes_<suffix>`). This
     * is the marginal job a daily arrival pays in production — two
     * broadcast joins against model-sized tables, cost O(batch) with the
-    * corpus appearing nowhere (BuildProbe measures exactly this). */
+    * corpus appearing nowhere. */
   private[graft] def appendSegment(newVecs: DataFrame, base: String,
       suffix: String): Unit = {
     val spark = newVecs.sparkSession
@@ -1728,10 +1728,10 @@ object Similarity extends QueryModule {
     // contradicted that story (7-8 s steady, the slowest quiet query).
     // The q185/q176/q180/q190 lifecycle convention applies verbatim: the
     // artifact is a deterministic function of the fixture dir, pass 1
-    // pays the build (visible in per-pass bench arrays + BuildProbe's
-    // full-vs-marginal rows), the median measures the steady serve, and
-    // the oracle still recomputes ALL six tables from the raw corpus —
-    // a green row certifies the persisted artifact, however it got there.
+    // pays the build (visible in per-pass bench arrays), the median
+    // measures the steady serve, and the oracle still recomputes ALL six
+    // tables from the raw corpus — a green row certifies the persisted
+    // artifact, however it got there.
     val base = ensureIvfPqDeltaIndex(spark, dir)
     val rd = (t: String) => spark.read.parquet(s"$base/$t")
     cellsComponent(rd("cells"), "cells")

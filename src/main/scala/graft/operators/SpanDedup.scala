@@ -98,7 +98,7 @@ object SpanDedup extends QueryModule {
   def dupSpanStats(spark: SparkSession, dir: String): DataFrame =
     dupSpanStatsOf(Tables.documents(spark, dir))
 
-  /** DataFrame-level body (ScaleProbe drives it on replicated corpora). */
+  /** DataFrame-level body: any `documents`-shaped frame. */
   private[graft] def dupSpanStatsOf(docs: DataFrame): DataFrame =
     coveredTokens(docs)
       .groupBy(col("doc_id"))

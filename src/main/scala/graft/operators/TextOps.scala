@@ -861,12 +861,6 @@ object TextOps extends QueryModule {
     * shared by q183 (postings derived in-plan) and q186 (postings read
     * from the persisted artifact), so the two forms cannot drift by a
     * rounding grammar. */
-  /** Probe hook: the scoring tail on externally-supplied tables
-    * ([[graft.tools.ScaleProbe]] drives it against pre-built posting
-    * artifacts at multiple scales). */
-  private[graft] def bm25ScoreTailProbe(tf: DataFrame, dfq: DataFrame,
-      stats: DataFrame): DataFrame = bm25ScoreTail(tf, dfq, stats, topK = 20)
-
   private def bm25ScoreTail(tf: DataFrame, dfq: DataFrame, stats: DataFrame,
       topK: Int): DataFrame =
     tf.join(broadcast(dfq), Seq("tok"))
@@ -1048,9 +1042,9 @@ object TextOps extends QueryModule {
       spark.read.parquet(s"$b/stats"))
   }
 
-  /** The keyword tail on externally-supplied posting tables
-    * ([[graft.tools.ScaleProbe]] drives it against pre-built artifacts
-    * at multiple scales, like [[bm25ScoreTailProbe]]). */
+  /** The keyword tail over (doc_id, dl, tok, tf) postings, their
+    * per-term df and the (n_docs, avgdl) corpus stats: q194 passes the
+    * persisted BM25 artifact's three tables. */
   private[graft] def tfidfTailProbe(rawPostings: DataFrame,
       termDf: DataFrame, stats: DataFrame): DataFrame = {
     val postings = rawPostings
@@ -1954,9 +1948,8 @@ object TextOps extends QueryModule {
   val BigramFloorMinCount = 2L
 
   /** q110: bigram surprisal with a min-pair-count floor — q103's scale
-    * fix (the r6 verdict's one flagged design note: both sides of q103's
-    * probability join grow with the corpus pair-vocabulary, its steepest
-    * honest ScaleProbe row). Pairs seen fewer than
+    * fix (both sides of q103's probability join grow with the corpus
+    * pair vocabulary). Pairs seen fewer than
     * [[BigramFloorMinCount]] times are dropped from the probability
     * table, and the matching per-doc transitions are excluded from
     * scoring symmetrically (inner join) — so each doc is scored only on
@@ -1974,9 +1967,8 @@ object TextOps extends QueryModule {
   def bigramSurprisalFloored(spark: SparkSession, dir: String): DataFrame =
     bigramSurprisalFlooredOf(Tables.documents(spark, dir))
 
-  /** DataFrame-level core (ScaleProbe feeds enlarged corpora;
-    * minPairCount is parameterized for probes, defaulting to the oracle
-    * constant). */
+  /** DataFrame-level core; `minPairCount` defaults to the oracle
+    * constant. */
   def bigramSurprisalFlooredOf(d: DataFrame,
       minPairCount: Long = BigramFloorMinCount): DataFrame = {
     val bg = adjacentPairs(d, carryDocId = true)
@@ -1998,15 +1990,6 @@ object TextOps extends QueryModule {
           .as("avg_bigram_surprisal_nats"))
       .orderBy(col("doc_id"))
   }
-
-  /** Probe helper: the probability-join vocabulary size under a floor —
-    * |{(l, r) : pair_cnt >= m}|. ScaleProbe prints it at m=1 vs m=2 so
-    * BASELINE.md can record how much of the pair vocabulary the floor
-    * actually keeps out of q110's joins. */
-  def pairVocabularySize(d: DataFrame, minPairCount: Long): Long =
-    adjacentPairs(d, carryDocId = false)
-      .groupBy(col("l"), col("r")).agg(count(lit(1)).as("pair_cnt"))
-      .filter(col("pair_cnt") >= minPairCount).count()
 
   private val bigramSurprisalFlooredSql =
     s"""WITH toks AS (SELECT doc_id, STRING_SPLIT(text, ' ') AS t FROM documents),

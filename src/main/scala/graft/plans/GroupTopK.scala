@@ -21,9 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `Sort → WindowGroupLimit(Partial) → Exchange → Sort →
   * WindowGroupLimit(Final) → Window → Filter`, so the SHUFFLE VOLUME of
   * the window formulation is already reduced to ≤ k rows per key per
-  * input partition (the ScaleProbe shuffle-bytes rows measure the two
-  * byte-identical). What the window path still pays, and this operator
-  * does not:
+  * input partition, as this operator's is. What the window path still
+  * pays, and this operator does not:
   *  - a full LOCAL SORT of every input partition before the partial
   *    limiter, and another sort of every post-shuffle partition before
   *    the final one — O(n log n) comparisons plus sort-spill I/O, where

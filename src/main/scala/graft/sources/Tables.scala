@@ -45,4 +45,8 @@ object Tables {
       case _ => raw
     }
   }
+
+  /** Any fixture table by file name, `events` through [[events]]. */
+  def byName(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir) else read(spark, dir, name)
 }

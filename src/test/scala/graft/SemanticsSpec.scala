@@ -1059,6 +1059,11 @@ class SemanticsSpec extends AnyFunSuite with SparkSpec {
     assert((1L to 64L).forall(m(_) == 1L))
     assert(Seq(100L, 101L, 103L).forall(m(_) == 100L))
     assert(iters <= 10, s"expected O(log 64) iterations, got $iters")
+    // 16x the links may add at most log2(16) + 1 rounds
+    val (long, longIters) = Dedup.clusterLabels(
+      (1L until 1024L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"), smallCutoff = 0)
+    assert(long.filter($"label" === 1L).count() === 1024L)
+    assert(longIters <= iters + 5, s"1024-link chain took $longIters rounds, 64-link $iters")
     // empty pair graph: no clusters, no iterations, no crash
     val (empty, it0) = Dedup.clusterLabels(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
