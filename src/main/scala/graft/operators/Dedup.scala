@@ -62,6 +62,10 @@ object Dedup extends QueryModule {
     docs.select(col("doc_id"), expr("graft_shingles(text)").as("shingles"))
       .filter(size(col("shingles")) >= 1)
 
+  /** [[shingled]] exploded: one (doc_id, sh) row per distinct shingle. */
+  private def shingleRows(docs: DataFrame): DataFrame =
+    shingled(docs).select(col("doc_id"), explode(col("shingles")).as("sh"))
+
   /** 32-byte content identity key. Every grouping/join whose key is "the
     * document text" shuffles and compares THIS instead of the full body:
     * at corpus scale a raw-text key pushes corpus-sized bytes through the
@@ -147,11 +151,10 @@ object Dedup extends QueryModule {
     * size/frequency aggregates, 3+ references); the raw shingle explode
     * is recomputed for its two references instead — it is scan-bound and
     * cheap, while materializing the largest intermediate doubles cache
-    * memory for no measured gain (tools-probe r4: caching both was the
-    * slowest variant). The matching oracle CTE prefix is
-    * [[gatedShinglesSqlCte]]. */
+    * memory (caching both measured slowest). The matching oracle CTE
+    * prefix is [[gatedShinglesSqlCte]]. */
   private def gatedShingles(docs: DataFrame, maxDF: Int, scope: String): DataFrame = {
-    val shAll = shingled(docs).select(col("doc_id"), explode(col("shingles")).as("sh"))
+    val shAll = shingleRows(docs)
     val hot = shAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDF).select(col("sh"))
     val gated = shAll.join(hot, Seq("sh"), "left_anti")
@@ -172,6 +175,17 @@ object Dedup extends QueryModule {
     * pipelines that shingle a different corpus (q78 shingles the
     * exact-dedup survivors) pass their own scope. */
   private val SharedShingleScope = "dedup.shingles.gated"
+
+  /** The DF gate over exploded (doc_id, sh) rows from ONE per-shingle
+    * document-frequency aggregate: the gated rows as an inner join
+    * against its ≤-cap side, so each row carries its shingle's `df`
+    * (columns sh, doc_id, df), and the hot list as its >-cap side. The
+    * same universe as [[gatedShingles]]' anti-join form. */
+  private def dfGate(rows: DataFrame): (DataFrame, DataFrame) = {
+    val df = rows.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    (rows.join(df.filter(col("df") <= MaxShingleDF), Seq("sh")),
+      df.filter(col("df") > MaxShingleDF).select(col("sh")))
+  }
 
   /** Shared oracle mirror of [[gatedShingles]]: DuckDB CTEs ending in
     * `sh` = the DF-gated (doc_id, shingle) universe over `docsTable`.
@@ -210,29 +224,51 @@ object Dedup extends QueryModule {
 
   /** The pair pipeline from an already-gated (doc_id, sh) universe —
     * split out so callers that manage their own gate (the q176 append,
-    * whose delta side must be gated by the BASE hot list) run the
-    * identical self-join/size/threshold chain. */
+    * whose delta side must be gated by the BASE hot list; the raw-label
+    * re-gate) run the identical self-join/size/threshold chain. */
   private[graft] def jaccardPairsFromGated(sh: DataFrame): DataFrame = {
-    val t = JaccardThreshold
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"), Seq("sh"))
+    val sizes = gatedSizes(sh)
+    jaccardScored(pairIntersections(sh), sizes, sizes)
+  }
+
+  /** Per-doc gated-shingle counts (doc_id, n). */
+  private def gatedSizes(sh: DataFrame): DataFrame =
+    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+
+  /** (doc_a < doc_b, n_inter) from a shingle-keyed equi-self-join of a
+    * gated (doc_id, sh) universe. */
+  private def pairIntersections(sh: DataFrame): DataFrame =
+    sh.as("a").join(sh.as("b"), Seq("sh"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
-    // NO broadcast hint on the size joins: `sizes` is one row PER GATED
-    // DOC — bounded at fixture scale but O(corpus) at 100 TB, where a
-    // forced broadcast is a driver OOM, not a slowdown. Left AQE-decided,
-    // the join broadcasts at runtime when the side is actually small and
-    // degrades to an honest doc_id-keyed shuffle when it is not
-    // (PlanSpec guards that no forced hint reappears in this core).
+
+  /** `inter` (doc_a, doc_b, ...) ⋈ sizesA(doc_a) ⋈ sizesB(doc_b), adding
+    * n_a and n_b from two (doc_id, n) tables. NO broadcast hint: a size
+    * table is one row PER GATED DOC — O(corpus) at 100 TB, where a
+    * forced broadcast is a driver OOM. Left AQE-decided, the join
+    * broadcasts at runtime when the side is actually small and is a
+    * doc_id-keyed shuffle when it is not (PlanSpec guards the hint out
+    * of the pair core). */
+  private def withSizes(inter: DataFrame, sizesA: DataFrame, sizesB: DataFrame): DataFrame =
     inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn("jaccard",
-        col("n_inter").cast(DoubleType) / (col("n_a") + col("n_b") - col("n_inter")))
-      .filter(col("jaccard") >= t)
+      .join(sizesA.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
+      .join(sizesB.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
+
+  /** |A∩B| / |A∪B| with |A∪B| = n_a + n_b − |A∩B|: integer arithmetic up
+    * to the one division, so the ratio is hash-exact against the oracle. */
+  private def jaccardOf(nInter: Column): Column =
+    nInter.cast(DoubleType) / (col("n_a") + col("n_b") - nInter)
+
+  /** The one Jaccard scorer: (doc_a, doc_b, n_inter, jaccard) for the
+    * pairs of `inter` (doc_a, doc_b, n_inter) at or above
+    * [[JaccardThreshold]], sized from (doc_id, n) tables per side. */
+  private def jaccardScored(inter: DataFrame, sizesA: DataFrame,
+      sizesB: DataFrame): DataFrame =
+    withSizes(inter, sizesA, sizesB)
+      .withColumn("jaccard", jaccardOf(col("n_inter")))
+      .filter(col("jaccard") >= JaccardThreshold)
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
-  }
 
   /** Oracle CTEs from the gated `sh` universe to thresholded Jaccard
     * `pairs` — the SQL mirror of [[ngramJaccardPairsOf]], shared by the
@@ -276,9 +312,9 @@ object Dedup extends QueryModule {
     *
     * Scale shape: identical to q72 — the same DF-gated shingle universe
     * and the same bounded sh-keyed self-join; only the denominator and
-    * threshold differ, so the containment scan inherits q72's probed
-    * growth rows unchanged. The ratio divides two exact ints and both
-    * engines evaluate the identical round-6 expression. */
+    * threshold differ, so the containment scan grows as q72 does. The
+    * ratio divides two exact ints and both engines evaluate the
+    * identical expression. */
   def containmentPairs(spark: SparkSession, dir: String): DataFrame =
     containmentPairsOf(Tables.documents(spark, dir))
 
@@ -287,14 +323,8 @@ object Dedup extends QueryModule {
   private[graft] def containmentPairsOf(docs: DataFrame): DataFrame = {
     val sh = gatedShingles(docs.select(col("doc_id"), col("text")),
       MaxShingleDF, SharedShingleScope)
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"), Seq("sh"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
-    val sized = inter
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
+    val sizes = gatedSizes(sh)
+    val sized = withSizes(pairIntersections(sh), sizes, sizes)
     // both directions from ONE pass over the pair pipeline (a Union of
     // two projections would re-execute the whole intersection subtree —
     // only the cached shingle scan gets reused)
@@ -373,8 +403,8 @@ object Dedup extends QueryModule {
     * edges collect to ~3 MB — the same budget class as a broadcast
     * table — while the distributed loop costs ~2 Spark jobs PER ROUND
     * regardless of size, which dominates wall-clock for small graphs
-    * (the common case after Jaccard thresholding: the r10 build probe
-    * measured 4.3 s to cluster 241 pairs, all scheduler overhead). The
+    * (the common case after Jaccard thresholding: a 241-pair graph took
+    * 4.3 s through the loop, all scheduler overhead). The
     * decision is made at runtime from the materialized edge count —
     * the same count-then-choose posture as AQE's broadcast decision —
     * so a 100 TB pair graph takes the O(log n) propagation unchanged. */
@@ -878,146 +908,52 @@ object Dedup extends QueryModule {
     * the O(log n) iterative joins carry a tiny pair scan instead of the
     * whole shingle self-join lineage. The raw-corpus label table is
     * DERIVED from the survivor universe ([[rawLabelsViaSurvivors]])
-    * rather than re-running the pair pipeline over the raw corpus — the
-    * build used to pay the shingle self-join and the O(log n) clustering
-    * twice. */
+    * rather than re-running the shingle self-join and the O(log n)
+    * clustering over the raw corpus. */
   private def writeNeardupArtifact(spark: SparkSession, dir: String,
       base: String): Unit =
     writeNeardupArtifactOf(Tables.documents(spark, dir), base)
-
-  /** The build's shingle stage: DF-gated (doc_id, sh, df) universe
-    * written as parquet.
-    * Identical gate semantics to [[gatedShingles]] minus the in-memory
-    * cache (the parquet table IS the materialization); the gate is an
-    * inner join against the ≤-cap side of the SAME df aggregate the
-    * anti-join form computes, so each row also carries its shingle's
-    * survivor-document frequency — [[rawLabelsViaSurvivors]]' gate-
-    * crossing probe then reads df off the candidate rows instead of
-    * re-scanning + re-aggregating the whole universe, and any consumer
-    * that only wants (doc_id, sh) prunes the column at the scan. */
-  private[graft] def writeGatedShingles(docs: DataFrame, path: String): Unit = {
-    val shAll = shingled(docs)
-      .select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val cold = shAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= MaxShingleDF)
-    shAll.join(cold, Seq("sh"))
-      .write.mode("overwrite").parquet(path)
-  }
 
   /** DataFrame-level build body: it takes the corpus, not a fixture dir,
     * so a replicated corpus measures build-cost growth through the exact
     * stages the q129 build runs.
     *
-    * Stage persistence discipline (the r11 ≤4 s ask): the gated shingle
-    * universe — measured at over half the build's cost when derived
-    * per-consumer — is written ONCE as `surv_shingles` and every later
-    * stage (pair self-join, raw-label gate probe) scans that compact
-    * two-long-column parquet instead of re-running the explode + DF
-    * gate or pinning the explode's output in executor memory. */
+    * The DF-gated shingle universe is written ONCE as `surv_shingles`
+    * ([[dfGate]]'s rows: sh, doc_id, df), and every later stage (pair
+    * self-join, raw-label gate probe) scans that compact parquet instead
+    * of re-running the explode + DF gate or pinning the explode's output
+    * in executor memory. Each row carries its shingle's survivor df, so
+    * [[rawLabelsViaSurvivors]]' crossing probe reads df off its
+    * candidate rows instead of re-aggregating the universe; a consumer
+    * that only wants (doc_id, sh) prunes the column at the scan. */
   private[graft] def writeNeardupArtifactOf(docs: DataFrame, base: String): Unit = {
     val spark = docs.sparkSession
     val survivors = exactSurvivors(docs)
-    // overlap the two writes that only depend on the survivor cache:
-    // the metadata table and the shingle stage are independent jobs, the
-    // scheduler interleaves their stages instead of paying two full job
-    // latencies back to back, and the BlockManager's per-block locking
-    // dedupes the cache's first materialization between them
+    def write(df: DataFrame, table: String): Unit =
+      df.write.mode("overwrite").parquet(s"$base/$table")
+    // the shingle stage and the metadata table are independent jobs over
+    // the survivor cache: overlapped, the scheduler interleaves their
+    // stages and the BlockManager's per-block locking dedupes the cache's
+    // first materialization between them
     graft.functions.Concurrent.runAll(
-      () => writeGatedShingles(
-        survivors.select(col("doc_id"), col("text")), s"$base/surv_shingles"),
-      () => survivors.drop("text").write.mode("overwrite").parquet(s"$base/survivors"))
+      () => write(dfGate(shingleRows(survivors.select(col("doc_id"), col("text"))))._1,
+        "surv_shingles"),
+      () => write(survivors.drop("text"), "survivors"))
     val gatedSurv = spark.read.parquet(s"$base/surv_shingles")
-    // overlap the label stage's duplicate-gate prefix (corpus sha2 scan,
-    // member map, candidate gate rows — inputs: corpus + survivor cache +
-    // the just-written shingle table, NOTHING from pairs/labels) with the
-    // pair self-join: its jobs fill scheduler slots the join leaves idle,
-    // and rawLabelsViaSurvivors then reuses the warm ScopedCache blocks.
-    // Non-fatal failures are swallowed inside (the label stage
-    // recomputes); fatal errors (OOM, interrupt) propagate out of the
-    // Future and surface at the await (ADVICE r14). The await MUST
-    // happen before any exception propagates: an escaping failure
-    // triggers ArtifactStore's staging cleanup, which must not race
-    // in-flight prefetch jobs (ADVICE r12). The prefetch runs under its
-    // own job group so a stalled prefetch job can be cancelled rather
-    // than hanging the build forever (the timeout path below).
-    // unique per build: a timed-out build must never cancel a CONCURRENT
-    // build's healthy prefetch on the same SparkContext
-    val prefetchGroup =
-      s"dedup.rawgate.prefetch-${java.util.UUID.randomUUID()}"
-    val fGate = scala.concurrent.Future {
-      val sc = docs.sparkSession.sparkContext
-      sc.setJobGroup(prefetchGroup,
-        "near-dup build: duplicate-gate prefix prefetch", interruptOnCancel = true)
-      try prefetchRawGate(docs, survivors, gatedSurv)
-      finally sc.clearJobGroup()
-    }(scala.concurrent.ExecutionContext.global)
-    val mainFailure =
-      try {
-        jaccardPairsFromGated(gatedSurv.select(col("doc_id"), col("sh")))
-          .write.mode("overwrite").parquet(s"$base/surv_pairs")
-        val (sl, _) = clusterLabels(spark.read.parquet(s"$base/surv_pairs")
-          .select(col("doc_a"), col("doc_b")))
-        sl.write.mode("overwrite").parquet(s"$base/surv_labels")
-        None
-      } catch { case t: Throwable => Some(t) }
-    // The prefetch is a documented best-effort optimization: wait a
-    // generous bound (far above any healthy prefix build), cancelling
-    // its job group on timeout so a stuck prefetch stage can no longer
-    // hang the build forever (ADVICE r14). Returning/throwing while
-    // prefetch tasks are still in flight is what must stay rare and
-    // LOUD: on the failure path an escaping exception triggers
-    // ArtifactStore's staging cleanup (ADVICE r12), and even the
-    // success path hands the staging dir to a publish rename — so after
-    // cancellation both paths wait a second bounded grace (cancelled
-    // interruptible tasks terminate well inside it), and only if the
-    // prefetch is STILL unresponsive do they diverge: the failure path
-    // refuses to race the cleanup and surfaces an explicit error (with
-    // the main-stage failure suppressed — never discarded), while the
-    // success path warns and proceeds (on POSIX a reader racing the
-    // rename just fails its open, and prefetch failures are swallowed
-    // by design). A fatal error from the Future rethrows here WITH the
-    // main-stage failure attached as suppressed (the r13 discipline).
-    try {
-      try scala.concurrent.Await.result(fGate,
-        scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES))
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          docs.sparkSession.sparkContext.cancelJobGroup(prefetchGroup)
-          // post-cancel grace is SHORT by design (ADVICE r15): cancelled
-          // interruptible tasks terminate in seconds, and the generous
-          // bound belongs on the pre-cancel wait above — a wedged
-          // prefetch must not double the worst-case stall to 20 min.
-          try scala.concurrent.Await.result(fGate,
-            scala.concurrent.duration.Duration(45, java.util.concurrent.TimeUnit.SECONDS))
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              if (mainFailure.isDefined) {
-                val e = new IllegalStateException(
-                  "near-dup build: prefetch unresponsive 45 s after job-group " +
-                    "cancellation; refusing to run staging cleanup concurrently " +
-                    "with in-flight prefetch tasks")
-                mainFailure.foreach(e.addSuppressed)
-                throw e
-              } else
-                System.err.println(
-                  "[dedup] WARN: prefetch unresponsive after cancellation; " +
-                    "proceeding to publish (reader-vs-rename is benign on POSIX)")
-          }
-      }
-    } catch {
-      // anything else escaping the awaits is a real prefetch-side error
-      // (the handler above consumed every timeout): surface it, with
-      // the main-stage failure attached rather than discarded
-      case t: Throwable =>
-        mainFailure
-          .filter(m => (m ne t) && !t.getSuppressed.exists(_ eq m))
-          .foreach(t.addSuppressed)
-        throw t
-    }
-    mainFailure.foreach(throw _)
-    rawLabelsViaSurvivors(docs, survivors,
-        spark.read.parquet(s"$base/surv_labels"), gatedSurv)
-      .write.mode("overwrite").parquet(s"$base/doc_labels")
+    // the label stage's duplicate-gate prefix reads the corpus, the
+    // survivor cache and the shingle table, nothing from pairs or labels,
+    // so it overlaps the pair self-join and the label propagation, and
+    // rawLabelsViaSurvivors then reuses its warm cache blocks
+    graft.functions.Concurrent.runAll(
+      () => prefetchRawGate(docs, survivors, gatedSurv),
+      () => {
+        write(jaccardPairsFromGated(gatedSurv.select(col("doc_id"), col("sh"))),
+          "surv_pairs")
+        write(clusterLabels(spark.read.parquet(s"$base/surv_pairs")
+          .select(col("doc_a"), col("doc_b")))._1, "surv_labels")
+      })
+    write(rawLabelsViaSurvivors(docs, survivors,
+      spark.read.parquet(s"$base/surv_labels"), gatedSurv), "doc_labels")
   }
 
   /** Raw-corpus cluster labels WITHOUT a second pair pipeline over the
@@ -1051,28 +987,81 @@ object Dedup extends QueryModule {
     * self-joins only survivor-level rows, with group sizes carrying the
     * multiplicity as weights.
     *
-    * Fast path: the two gate universes can only differ where a shingle's
-    * weighted (raw) DF crosses the threshold its unweighted (survivor)
-    * DF does not, and a shingle's DFs only differ if it occurs in a
-    * DUPLICATED document (df_raw = df_surv + Σ over dup groups holding
-    * it of gsz−1). So the crossing probe, and everything else the fast
-    * path computes, touches only the duplicate groups and their
-    * shingles in the already-cached survivor-gated table — work
-    * proportional to the corpus's DUPLICATION, not its size. If no
-    * shingle crosses (always true with no exact duplicates, typical far
-    * beyond it), the raw pair graph among representatives IS the
-    * survivor pair graph: `surv_labels` serve as the representative
+    * The two gate universes differ only on shingles whose weighted (raw)
+    * DF crosses the cap their unweighted (survivor) DF stays under, and a
+    * shingle's DFs differ only if it occurs in a DUPLICATED document
+    * (df_raw = df_surv + Σ over dup groups holding it of gsz−1). So the
+    * crossing set comes from the duplicated reps' rows of `gatedSurv`
+    * alone — work proportional to the corpus's DUPLICATION, not its size
+    * — and the raw universe is `gatedSurv` minus the crossing shingles
+    * (a shingle the survivor gate already removed has df_raw ≥ df_surv >
+    * MaxShingleDF: gated in both). If nothing crosses (always true with
+    * no exact duplicates), the raw pair graph among representatives IS
+    * the survivor pair graph: `surv_labels` serve as the representative
     * labels, the duplicate groups get their clique blow-up, and the
-    * second pair pipeline + O(log n) propagation are skipped entirely —
-    * this was half of q129's build cost. */
+    * second pair pipeline and O(log n) propagation are skipped.
+    *
+    * `gatedSurv` is the DF-gated survivor universe with per-row survivor
+    * df ([[dfGate]]'s rows; the build passes its `surv_shingles`). */
   private[graft] def rawLabelsViaSurvivors(docs: DataFrame, survivors: DataFrame,
-      survLabels: DataFrame): DataFrame = {
-    val g = gatedShingles(survivors.select(col("doc_id"), col("text")),
-      MaxShingleDF, "dedup.purge.shingles")
-    // the artifact's surv_shingles carries df per row; the cached form
-    // doesn't, so derive it here (test-hook / probe path only)
-    rawLabelsViaSurvivors(docs, survivors, survLabels,
-      g.join(g.groupBy(col("sh")).agg(count(lit(1)).as("df")), Seq("sh")))
+      survLabels: DataFrame, gatedSurv: DataFrame): DataFrame = {
+    // no exact duplicates at all -> the raw corpus IS the survivor
+    // corpus: identical gate, identical pairs, identical labels
+    if (!hasDupGroups(survivors))
+      return survLabels.select(col("node"), col("label"))
+    val (dupReps, memberOf, cand) = rawGatePrefix(docs, survivors, gatedSurv)
+    // df rides on every candidate row (all rows of one sh share it)
+    val crossing = cand.groupBy(col("sh"))
+      .agg(sum(col("gsz") - 1).as("extra"), first(col("df")).as("df_surv"))
+      .filter(col("df_surv") + col("extra") > MaxShingleDF)
+      .select(col("sh"))
+    if (crossing.limit(1).count() == 0) {
+      // identical gates -> identical pairs -> the survivor labels ARE
+      // the representative labels; only duplicate groups need rows the
+      // survivor label table doesn't already have
+      val dupN = cand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+      val repLabel = dupReps.select(col("rep").as("doc_id"))
+        .join(survLabels.select(col("node").as("doc_id"), col("label")),
+          Seq("doc_id"), "left")
+        .join(dupN, Seq("doc_id"), "left")
+        // a label row exists for every group member iff the rep is in a
+        // survivor-level pair OR the group cliques on >= 1 gated shingle
+        .filter(col("label").isNotNull || col("n").isNotNull)
+        .select(col("doc_id").as("rep"),
+          coalesce(col("label"), col("doc_id")).as("label"))
+      // group members = the non-reps plus each group's rep itself
+      val dupMembers = memberOf
+        .unionByName(dupReps.select(col("rep").as("doc_id"), col("rep")))
+      val dupPart = dupMembers.join(repLabel, Seq("rep"))
+        .select(col("doc_id").as("node"), col("label"))
+      // reps of duplicate groups re-enter via dupPart with the same label
+      survLabels.select(col("node"), col("label"))
+        .join(dupReps.select(col("rep").as("node")), Seq("node"), "left_anti")
+        .unionByName(dupPart)
+    } else {
+      // a shingle crosses the gate: re-cluster the representative graph
+      // over the RAW (group-weighted) gate
+      val members = docs.select(col("doc_id"), contentKey(col("text")).as("tkey"))
+        .join(survivors.select(col("doc_id").as("rep"), col("tkey")),
+          Seq("tkey"))
+        .select(col("doc_id"), col("rep"))
+      // referenced by the size aggregate, both sides of the self-join and
+      // the representative roster
+      val gated = graft.functions.ScopedCache.persist("dedup.rawgate.shingles",
+        gatedSurv.select(col("doc_id"), col("sh")).join(crossing, Seq("sh"), "left_anti"))
+      val labelsH = clusterLabels(
+        jaccardPairsFromGated(gated).select(col("doc_a"), col("doc_b")))._1
+      // label per representative: its component minimum, or itself when
+      // its only raw pairs are the intra-group clique (k >= 2 exact
+      // copies sharing >= 1 ungated shingle)
+      val repLabel = gated.select(col("doc_id")).distinct()
+        .join(labelsH.select(col("node").as("doc_id"), col("label")), Seq("doc_id"), "left")
+        .join(survivors.select(col("doc_id"), col("gsz")), Seq("doc_id"))
+        .filter(col("label").isNotNull || col("gsz") >= 2)
+        .select(col("doc_id").as("rep"), coalesce(col("label"), col("doc_id")).as("label"))
+      members.join(repLabel, Seq("rep"))
+        .select(col("doc_id").as("node"), col("label"))
+    }
   }
 
   /** True iff the corpus has ≥1 exact-duplicate group — read off the
@@ -1085,12 +1074,12 @@ object Dedup extends QueryModule {
   /** The duplicate-gate prefix of [[rawLabelsViaSurvivors]]: the member
     * map (non-representative → its group's rep) and the gated shingle
     * rows of duplicated reps. Both are ScopedCache'd, for two reasons:
-    * `cand` is referenced twice within the fast path itself (gate-
-    * crossing probe + clique-size count — previously two scans of the
-    * shingle table), and the artifact BUILD prefetches both concurrently
-    * with the pair self-join (they depend only on the corpus, the
-    * survivor cache, and the written shingle table — never on pairs or
-    * labels), so by the time the label stage runs, the blocks are warm.
+    * `cand` is referenced by the crossing probe and again by either the
+    * clique-size count or the re-gate, and the artifact BUILD prefetches
+    * both concurrently with the pair self-join (they depend only on the
+    * corpus, the survivor cache, and the written shingle table — never
+    * on pairs or labels), so by the time the label stage runs, the
+    * blocks are warm.
     *
     * memberOf: members of duplicate groups WITHOUT re-shuffling the
     * corpus by text — non-representatives fall out of an id anti-join
@@ -1122,13 +1111,13 @@ object Dedup extends QueryModule {
   }
 
   /** Build-side overlap hook: materialize the [[rawGatePrefix]] caches
-    * while the pair self-join runs (the build calls this on a Future —
-    * the prefix shares no input with the pair/label stages, so its jobs
-    * interleave with theirs instead of extending the critical path).
-    * Purely an optimization: non-fatal failures are swallowed — the
-    * label stage recomputes the identical plans and surfaces real
-    * errors itself. Fatal errors (OutOfMemoryError, interrupts)
-    * propagate so a dying JVM is never masked (ADVICE r14). */
+    * while the pair self-join runs. The prefix shares no input with the
+    * pair and label stages, so its jobs interleave with theirs instead of
+    * extending the critical path. Purely an optimization: a non-fatal
+    * failure is swallowed, since the label stage recomputes the
+    * identical plans and surfaces a real error itself; a fatal one
+    * (OutOfMemoryError, LinkageError) propagates, so a dying JVM is
+    * never masked. */
   private[operators] def prefetchRawGate(docs: DataFrame, survivors: DataFrame,
       gatedSurv: DataFrame): Unit =
     try {
@@ -1140,105 +1129,21 @@ object Dedup extends QueryModule {
       }
     } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** 4-arg form taking the already-materialized gated survivor-shingle
-    * universe with per-row survivor df (the artifact build passes its
-    * just-written `surv_shingles` parquet read, so the gate probe scans
-    * disk instead of re-deriving the explode). */
-  private[graft] def rawLabelsViaSurvivors(docs: DataFrame, survivors: DataFrame,
-      survLabels: DataFrame, gatedSurv: DataFrame): DataFrame = {
-    // no exact duplicates at all -> the raw corpus IS the survivor
-    // corpus: identical gate, identical pairs, identical labels
-    if (!hasDupGroups(survivors))
-      return survLabels.select(col("node"), col("label"))
-    val (dupReps, memberOf, cand) = rawGatePrefix(docs, survivors, gatedSurv)
-    // df rides on every candidate row (all rows of one sh share it), so
-    // the crossing probe is ONE pass over the duplication-proportional
-    // candidate set — no second scan or re-aggregation of the universe
-    val gatesDiffer = cand.groupBy(col("sh"))
-      .agg(sum(col("gsz") - 1).as("extra"), first(col("df")).as("df_surv"))
-      .filter(col("df_surv") + col("extra") > MaxShingleDF)
-      .limit(1).count() > 0
-    if (!gatesDiffer) {
-      // identical gates -> identical pairs -> the survivor labels ARE
-      // the representative labels; only duplicate groups need rows the
-      // survivor label table doesn't already have
-      val dupN = cand.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      val repLabel = dupReps.select(col("rep").as("doc_id"))
-        .join(survLabels.select(col("node").as("doc_id"), col("label")),
-          Seq("doc_id"), "left")
-        .join(dupN, Seq("doc_id"), "left")
-        // a label row exists for every group member iff the rep is in a
-        // survivor-level pair OR the group cliques on >= 1 gated shingle
-        .filter(col("label").isNotNull || col("n").isNotNull)
-        .select(col("doc_id").as("rep"),
-          coalesce(col("label"), col("doc_id")).as("label"))
-      // group members = the non-reps plus each group's rep itself
-      val dupMembers = memberOf
-        .unionByName(dupReps.select(col("rep").as("doc_id"), col("rep")))
-      val dupPart = dupMembers.join(repLabel, Seq("rep"))
-        .select(col("doc_id").as("node"), col("label"))
-      // reps of duplicate groups re-enter via dupPart with the same label
-      survLabels.select(col("node"), col("label"))
-        .join(dupReps.select(col("rep").as("node")), Seq("node"), "left_anti")
-        .unionByName(dupPart)
-    } else {
-      // a shingle crosses the gate: re-gate and re-cluster the
-      // representative graph under the RAW (group-weighted) frequency
-      val members = docs.select(col("doc_id"), contentKey(col("text")).as("tkey"))
-        .join(survivors.select(col("doc_id").as("rep"), col("tkey")),
-          Seq("tkey"))
-        .select(col("doc_id"), col("rep"))
-      // per-rep group size straight off the cached survivor aggregate
-      val gsize = survivors.select(col("doc_id").as("rep"), col("gsz"))
-      val shSurv = shingled(survivors.select(col("doc_id"), col("text")))
-        .select(col("doc_id").as("rep"), explode(col("shingles")).as("sh"))
-      val hotRaw = shSurv.join(gsize, Seq("rep"))
-        .groupBy(col("sh")).agg(sum(col("gsz")).as("df_raw"))
-        .filter(col("df_raw") > MaxShingleDF).select(col("sh"))
-      // referenced by the size aggregate and both sides of the self-join
-      val gated = graft.functions.ScopedCache.persist("dedup.rawgate.shingles",
-        shSurv.join(hotRaw, Seq("sh"), "left_anti"))
-      val sizes = gated.groupBy(col("rep")).agg(count(lit(1)).as("n"))
-      val inter = gated.as("a").join(gated.as("b"), Seq("sh"))
-        .filter(col("a.rep") < col("b.rep"))
-        .groupBy(col("a.rep").as("doc_a"), col("b.rep").as("doc_b"))
-        .agg(count(lit(1)).as("n_inter"))
-      // no broadcast hints anywhere, same O(corpus) rationale as
-      // jaccardPairsUnsorted: AQE decides at runtime
-      val pairsH = inter
-        .join(sizes.select(col("rep").as("doc_a"), col("n").as("n_a")), "doc_a")
-        .join(sizes.select(col("rep").as("doc_b"), col("n").as("n_b")), "doc_b")
-        .filter(col("n_inter").cast(DoubleType) /
-          (col("n_a") + col("n_b") - col("n_inter")) >= JaccardThreshold)
-        .select(col("doc_a"), col("doc_b"))
-      val labelsH = clusterLabels(pairsH)._1
-      // label per representative: its component minimum, or itself when
-      // its only raw pairs are the intra-group clique (k >= 2 exact
-      // copies sharing >= 1 ungated shingle)
-      val repLabel = sizes.select(col("rep"))
-        .join(labelsH.select(col("node").as("rep"), col("label")), Seq("rep"), "left")
-        .join(gsize, Seq("rep"))
-        .filter(col("label").isNotNull || col("gsz") >= 2)
-        .select(col("rep"), coalesce(col("label"), col("rep")).as("label"))
-      members.join(repLabel, Seq("rep"))
-        .select(col("doc_id").as("node"), col("label"))
-    }
-  }
-
   /** Test hook: the derived raw-corpus labels for a constructed corpus,
     * composing the same pieces as the artifact build (exact survivors →
-    * survivor pairs → survivor labels → [[rawLabelsViaSurvivors]]).
+    * DF-gated survivor universe → survivor pairs → survivor labels →
+    * [[rawLabelsViaSurvivors]]), with no parquet in between.
     * SemanticsSpec pins it against the direct raw pipeline
     * (`clusterLabels(jaccardPairsUnsorted(docs))`) on corpora WITH exact
     * duplicates — including gate-crossing ones — which the fixture
     * (duplicate-free) cannot exercise. */
   private[graft] def rawLabelsOf(docs: DataFrame): DataFrame = {
     val survivors = exactSurvivors(docs)
+    val (gatedSurv, _) = dfGate(shingleRows(survivors.select(col("doc_id"), col("text"))))
     val (sl, _) = clusterLabels(
-      jaccardPairsUnsorted(survivors.select(col("doc_id"), col("text")),
-          scope = "dedup.purge.shingles")
+      jaccardPairsFromGated(gatedSurv.select(col("doc_id"), col("sh")))
         .select(col("doc_a"), col("doc_b")))
-    rawLabelsViaSurvivors(docs, survivors, sl)
+    rawLabelsViaSurvivors(docs, survivors, sl, gatedSurv)
   }
 
   /** Build the artifact for `dir` unless a complete, signature-valid one
@@ -1459,18 +1364,15 @@ object Dedup extends QueryModule {
       .select(col("doc_a"), col("doc_b"),
         expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))")
           .cast(LongType).as("n_agree"))
-    agree
-      .join(inter, Seq("doc_a", "doc_b"), "left")
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
+    withSizes(agree.join(inter, Seq("doc_a", "doc_b"), "left"), sizes, sizes)
       .withColumn("ni", coalesce(col("n_inter"), lit(0L)))
       .select(col("doc_a"), col("doc_b"), col("n_agree"),
         round(col("n_agree").cast(DoubleType) / NumHashes, 6).as("est_jaccard"),
         col("ni").as("n_inter"),
-        round(col("ni").cast(DoubleType) / (col("n_a") + col("n_b") - col("ni")), 6)
+        round(jaccardOf(col("ni")), 6)
           .as("exact_jaccard"),
         round(abs(col("n_agree").cast(DoubleType) / NumHashes
-          - col("ni").cast(DoubleType) / (col("n_a") + col("n_b") - col("ni"))), 6)
+          - jaccardOf(col("ni"))), 6)
           .as("abs_err"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -1604,20 +1506,18 @@ object Dedup extends QueryModule {
         .join(sh.select(col("doc_id").as("doc_b"), col("base")),
           Seq("doc_b", "base"))
         .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
-      val perPair = cand
+      val agree = cand
         .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
         .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
           expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))")
             .cast(LongType).as("n_agree"))
-        .join(inter, Seq("doc_a", "doc_b"), "left")
-        .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-        .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
+      val perPair = withSizes(agree.join(inter, Seq("doc_a", "doc_b"), "left"), sizes, sizes)
         .withColumn("ni", coalesce(col("n_inter"), lit(0L)))
         .select(
           (col("n_agree").cast(DoubleType) / NumHashes).as("est"),
           abs(col("n_agree").cast(DoubleType) / NumHashes
-            - col("ni").cast(DoubleType) / (col("n_a") + col("n_b") - col("ni")))
+            - jaccardOf(col("ni")))
             .as("ae"))
       // the threshold is Dedup.JaccardThreshold INTERPOLATED (not a 0.5
       // literal) so retuning the shipped cut re-prices this card too —
@@ -2181,11 +2081,9 @@ object Dedup extends QueryModule {
     val spark = docs.sparkSession
     val seen = docs.filter(pmod(col("doc_id"), lit(IncomingCarveMod.toLong)) =!= 0)
     val hashes = seen.select(sha2(col("text"), 256).as("h")).distinct()
-    // gatedShingles' body, kept inline because the hot list is itself an
-    // index table here (the helper only returns the gated output)
-    val shAll = shingled(seen).select(col("doc_id"), explode(col("shingles")).as("sh"))
-    val hot = shAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > MaxShingleDF).select(col("sh"))
+    // the hot list is itself an index table here
+    val shAll = shingleRows(seen)
+    val (_, hot) = dfGate(shAll)
     hashes.write.mode("overwrite").parquet(s"$base/hashes")
     hot.write.mode("overwrite").parquet(s"$base/hot")
     // gate against the hot table JUST WRITTEN, not the hot plan: reusing
@@ -2311,8 +2209,7 @@ object Dedup extends QueryModule {
         .filter(col("doc_id") > col("first_id")).select(col("doc_id")))
       .distinct()
       .withColumn("is_exact", lit(true))
-    val incSh = shingled(incoming)
-      .select(col("doc_id"), explode(col("shingles")).as("sh"))
+    val incSh = shingleRows(incoming)
       .join(hot.select(col("sh")), Seq("sh"), "left_anti")
       .select(col("sh"), col("doc_id").as("inc_doc"))
     val seenSh = seenShingles.select(col("sh"), col("doc_id").as("seen_doc"))
@@ -2640,18 +2537,12 @@ object Dedup extends QueryModule {
         .select(col("keep.doc_id").as("doc_id"), col("keep.text").as("text"),
           col("tkey")))
     val bshAll = graft.functions.ScopedCache.persist("dedup.append.bshall",
-      shingled(bsv.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), explode(col("shingles")).as("sh")))
-    // the gate as an inner join against the ≤-cap side of the df
-    // aggregate, so every gated row carries its shingle's survivor df
-    // (the surv_shingles pattern from the q129 build)
-    val cold = bshAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= MaxShingleDF)
-    val hot = bshAll.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > MaxShingleDF).select(col("sh"))
+      shingleRows(bsv.select(col("doc_id"), col("text"))))
+    // every gated row carries its shingle's survivor df (the q129 build's
+    // surv_shingles rows)
+    val (gated, hot) = dfGate(bshAll)
     val bsh = graft.functions.ScopedCache.persist("dedup.append.bsh",
-      bshAll.join(cold, Seq("sh"))
-        .select(col("doc_id"), col("sh"), col("df")))
+      gated.select(col("doc_id"), col("sh"), col("df")))
     val bpairs = jaccardPairsFromGated(bsh.select(col("doc_id"), col("sh")))
     val (bLabels, _) = clusterLabels(bpairs.select(col("doc_a"), col("doc_b")))
     (bsv, hot, bsh, bpairs, bLabels)
@@ -2744,10 +2635,7 @@ object Dedup extends QueryModule {
       .join(exBase.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("text")))
     // delta shingles under the FROZEN base gate
-    val dsh = ck("dsh", shingled(dnew)
-      .select(col("doc_id"), explode(col("shingles")).as("sh"))
-      .join(hot, Seq("sh"), "left_anti"))
-    val dsz = dsh.groupBy(col("doc_id")).agg(count(lit(1)).as("dn"))
+    val dsh = ck("dsh", shingleRows(dnew).join(hot, Seq("sh"), "left_anti"))
     // per-survivor gated-shingle counts: the artifact's bsv carries them
     // (`nsh` — persisted by the build for exactly this reuse, and kept
     // exact by the q185 fold), so the admission skips a corpus-sized
@@ -2756,18 +2644,13 @@ object Dedup extends QueryModule {
     // gated set crossed the DF cap) has no bsh rows, so it reaches no
     // xinter row under either form — the paths are row-identical.
     val bsz =
-      if (bsv.columns.contains("nsh"))
-        bsv.select(col("doc_id"), col("nsh").as("bn"))
-      else bsh.groupBy(col("doc_id")).agg(count(lit(1)).as("bn"))
+      if (bsv.columns.contains("nsh")) bsv.select(col("doc_id"), col("nsh").as("n"))
+      else gatedSizes(bsh)
     val xinter = dsh.as("a").join(bsh.as("b"), Seq("sh"))
-      .groupBy(col("a.doc_id").as("ddoc"), col("b.doc_id").as("bdoc"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val xpairs = xinter
-      .join(dsz.withColumnRenamed("doc_id", "ddoc"), Seq("ddoc"))
-      .join(bsz.withColumnRenamed("doc_id", "bdoc"), Seq("bdoc"))
-      .filter(col("n_inter").cast(DoubleType)
-        / (col("dn") + col("bn") - col("n_inter")) >= JaccardThreshold)
-      .select(col("ddoc"), col("bdoc"))
+    val xpairs = jaccardScored(xinter, gatedSizes(dsh), bsz)
+      .select(col("doc_a").as("ddoc"), col("doc_b").as("bdoc"))
     val nearBase = ck("nearbase", xpairs
       .join(bLabels.select(col("node").as("bdoc"), col("label")),
         Seq("bdoc"), "left")
@@ -2907,8 +2790,8 @@ object Dedup extends QueryModule {
 
   /** Fold-once half: run the compaction fold for `dir`'s (base, delta)
     * split unless a signature-valid compacted generation exists — the
-    * q176/q180 convention (r12 verdict class: "ensure artifacts rather
-    * than paying builds inside a timed pass"). Sound because the fold is
+    * q176/q180 convention: ensure artifacts rather than paying builds
+    * inside a timed pass. Sound because the fold is
     * a deterministic function of `dir` alone: the base artifact it reads
     * is itself signature-validated against the same `dir`, and the delta
     * is `dir`'s mod-split complement. A production compactor runs the
@@ -2966,8 +2849,7 @@ object Dedup extends QueryModule {
         .select(col("doc_id"), col("text"), col("tkey")))
     // -- union DF gate ----------------------------------------------------
     val dshAll = persist("dedup.compact.dshall",
-      shingled(dnew.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), explode(col("shingles")).as("sh")))
+      shingleRows(dnew.select(col("doc_id"), col("text"))))
     val dfD = persist("dedup.compact.dfd",
       dshAll.groupBy(col("sh")).agg(count(lit(1)).as("df_d")))
     // base df of the touched shingles only (df rides on every bsh row)
@@ -3012,25 +2894,14 @@ object Dedup extends QueryModule {
       .groupBy(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
       .agg(count(lit(1)).as("n_inter"))
-    val interProbe = probeSh.as("a").join(probeSh.as("b"), Seq("sh"))
-      .filter(col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_inter"))
+    val interProbe = pairIntersections(probeSh)
     // sizes: probe docs re-counted under the union gate; partners reuse
     // the persisted base-gate count (equal by unaffectedness)
-    val szProbe = persist("dedup.compact.szprobe",
-      probeSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
+    val szProbe = persist("dedup.compact.szprobe", gatedSizes(probeSh))
     val sizes = szProbe.unionByName(
       bsv.join(probeDocs, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("nsh").as("n")))
-    val t = JaccardThreshold
-    val pairsNew = interMixed.unionByName(interProbe)
-      .join(sizes.select(col("doc_id").as("doc_a"), col("n").as("n_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("n").as("n_b")), "doc_b")
-      .withColumn("jaccard",
-        col("n_inter").cast(DoubleType) / (col("n_a") + col("n_b") - col("n_inter")))
-      .filter(col("jaccard") >= t)
-      .select(col("doc_a"), col("doc_b"), col("n_inter"), col("jaccard"))
+    val pairsNew = jaccardScored(interMixed.unionByName(interProbe), sizes, sizes)
     // base pairs with both endpoints untouched are reused VERBATIM
     val pairsReused = bpairs
       .join(affected.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_anti")
@@ -3049,7 +2920,7 @@ object Dedup extends QueryModule {
     // the size override is scoped to AFFECTED docs: an affected survivor
     // whose ENTIRE gated set crossed the cap has no szProbe row (zero
     // remaining shingle rows) — its union-gate size is 0, not the stale
-    // base-gate count a bare coalesce(nsh2, nsh) would keep (ADVICE r12)
+    // base-gate count a bare coalesce(nsh2, nsh) would keep
     val bsvU = rekey(
       bsv.join(szProbe.withColumnRenamed("n", "nsh2"), Seq("doc_id"), "left")
         .join(affected.withColumn("affu", lit(true)), Seq("doc_id"), "left")

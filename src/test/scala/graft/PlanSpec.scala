@@ -1458,4 +1458,34 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), plan.take(4000))
     assert(plan.contains("HashAggregate"), plan.take(4000))
   }
+
+  test("AQE splits a 90%-hot key's partition in a forced sort-merge join") {
+    import org.apache.spark.sql.functions._
+    // 90% of 500k fact rows carry key 0 (enough for the hot key's shuffle
+    // partition to pass the 1 MB threshold below), the rest spread over
+    // 100k keys; id-derived, so the skew survives recomputation
+    val fact = spark.range(500000L)
+      .withColumn("key", when(pmod(col("id"), lit(10)) < 9, 0L)
+        .otherwise(pmod(col("id"), lit(100000L))))
+      .withColumn("v", pmod(col("id"), lit(1000L)))
+    val dim = spark.range(100000).select(col("id").as("key"), (col("id") * 3L).as("weight"))
+    // a GLOBAL aggregate downstream: a keyed one on the join key would
+    // require the join's hash partitioning, and AQE does not split a
+    // partition whose distribution a later operator requires
+    def total(f: org.apache.spark.sql.DataFrame, d: org.apache.spark.sql.DataFrame) =
+      f.join(d, "key").agg(sum(col("v") * col("weight")).as("s"))
+    // the default thresholds (256 MB) hide skew at test size; lowered to
+    // the setting a cluster job would tune toward
+    val confs = Seq("spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m")
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      val split = total(fact.hint("merge"), dim.hint("merge"))
+      val plan = executedPlan(split)
+      assert(plan.contains("SortMergeJoin(skew=true)"), plan.take(4000))
+      assert(split.first().getLong(0) === total(fact, broadcast(dim)).first().getLong(0))
+    } finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
 }

@@ -972,7 +972,7 @@ class SemanticsSpec extends AnyFunSuite with SparkSpec {
     val session = spark
     import session.implicits._
     // the fixture has zero exact duplicates, so the artifact build's
-    // derived doc_labels path (r10) needs constructed corpora: with
+    // derived doc_labels path needs constructed corpora: with
     // duplicates below the DF gate (fast path: survivor labels reused),
     // and with a duplicate group big enough that the RAW document
     // frequency of a shingle crosses MaxShingleDF while the survivor
@@ -1014,13 +1014,17 @@ class SemanticsSpec extends AnyFunSuite with SparkSpec {
     assert(derived(crossing) === crossDirect)
 
     // the full artifact BUILD body (parquet writes + read-backs included)
-    // must produce the same doc_labels on the duplicate-heavy corpus
-    val buildBase = java.nio.file.Files
-      .createTempDirectory("graft-neardup-dup-test").toString
-    operators.Dedup.writeNeardupArtifactOf(crossing, buildBase)
-    val fromBuild = spark.read.parquet(s"$buildBase/doc_labels")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fromBuild === crossDirect)
+    // must produce the same doc_labels: `mild` takes the fast path, which
+    // reads the cand / memberOf caches the build prefetches beside the
+    // pair self-join, and `crossing` the re-gated slow path
+    for ((corpus, expected) <- Seq(mild -> mildDirect, crossing -> crossDirect)) {
+      val buildBase = java.nio.file.Files
+        .createTempDirectory("graft-neardup-dup-test").toString
+      operators.Dedup.writeNeardupArtifactOf(corpus, buildBase)
+      val fromBuild = spark.read.parquet(s"$buildBase/doc_labels")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(fromBuild === expected)
+    }
   }
 
   test("q77 transitivity: A~B and B~C puts A,B,C in one cluster though A!~C") {
@@ -1064,6 +1068,11 @@ class SemanticsSpec extends AnyFunSuite with SparkSpec {
       (1L until 1024L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"), smallCutoff = 0)
     assert(long.filter($"label" === 1L).count() === 1024L)
     assert(longIters <= iters + 5, s"1024-link chain took $longIters rounds, 64-link $iters")
+    // a 2,000-leaf star: one mega-cluster whose hub label is the hot key
+    // of every round join, resolved to the hub's label on every node
+    val (star, _) = Dedup.clusterLabels(
+      (2L to 2001L).map(i => (1L, i)).toDF("doc_a", "doc_b"), smallCutoff = 0)
+    assert(star.count() === 2001L && star.filter($"label" === 1L).count() === 2001L)
     // empty pair graph: no clusters, no iterations, no crash
     val (empty, it0) = Dedup.clusterLabels(
       Seq.empty[(Long, Long)].toDF("doc_a", "doc_b"))
