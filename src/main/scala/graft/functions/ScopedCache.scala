@@ -4,6 +4,7 @@ import scala.util.Try
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.GraftSqlBridge
 
 /** The one cache and lineage-truncation policy of the engine.
   *
@@ -197,12 +198,14 @@ object ScopedCache {
   def releaseCheckpoint(df: DataFrame): Unit = release(df, blocking = true)
 
   /** The one release path (loops, one-shot sites, eviction, [[clear]]):
-    * a truncation's blocks live on its RDD-scan root's RDD; a persisted
-    * plan goes through the cache manager (a no-op for a plan nobody
-    * persisted, such as a loop's untruncated generation 0). */
+    * a truncation's blocks live on its RDD-scan root's RDD, dropped by id
+    * (`RDD.unpersist` would log a WARN for every intended release of a
+    * local checkpoint); a persisted plan goes through the cache manager
+    * (a no-op for a plan nobody persisted, such as a loop's untruncated
+    * generation 0). */
   private def release(df: DataFrame, blocking: Boolean): Unit =
     if (isLive(df)) Try(df.queryExecution.analyzed match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking)
+      case r: LogicalRDD => GraftSqlBridge.unpersistRDD(r.rdd.sparkContext, r.rdd.id, blocking)
       case _ => df.unpersist(blocking)
     })
 

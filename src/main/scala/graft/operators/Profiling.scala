@@ -891,7 +891,7 @@ object Profiling extends QueryModule {
   def vocabGrowthOf(d: DataFrame): DataFrame = {
     val nDocs = d.agg((max(col("doc_id")) + 1).as("n_docs"))
     val tk = d
-      // loud non-negativity gate (kmVectors' idiom): Spark's `div`
+      // loud non-negativity gate (Similarity.requireDim's idiom): Spark's `div`
       // TRUNCATES while DuckDB's `//` FLOORS — identical for doc_id >= 0,
       // divergent below it, so a negative id must fail, not drift
       .withColumn("doc_id",

@@ -10,10 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Building a DataFrame from a hand-constructed logical plan goes through
   * `Dataset.ofRows`, and appending a planner strategy at runtime goes
   * through `SparkSession.experimental` — both scoped `private[sql]` /
-  * classic-only; waiting for the listener bus to drain is
-  * `private[spark]`. Everything else in graft stays outside Spark's
-  * namespace; this bridge exists so exactly these calls can cross it
-  * (the standard pattern for Catalyst extension libraries).
+  * classic-only; waiting for the listener bus to drain and dropping an
+  * RDD's blocks by id are `private[spark]`. Everything else in graft
+  * stays outside Spark's namespace; this bridge exists so exactly these
+  * calls can cross it (the standard pattern for Catalyst extension
+  * libraries).
   */
 object GraftSqlBridge {
 
@@ -56,4 +57,10 @@ object GraftSqlBridge {
     * for a finished action are complete only after this. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty(30000L)
+
+  /** Drop RDD `rddId`'s blocks and its persistent-RDD entry: the body of
+    * `RDD.unpersist` (and the call ContextCleaner makes), without the
+    * WARN `RDD.unpersist` logs for every locally checkpointed RDD. */
+  def unpersistRDD(sc: org.apache.spark.SparkContext, rddId: Int, blocking: Boolean): Unit =
+    sc.unpersistRDD(rddId, blocking)
 }

@@ -158,6 +158,38 @@ class ScopedCacheSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("release: dropping local checkpoints logs no lineage WARN and frees their RDDs") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("scoped-cache-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(appender)
+    // every generation a round hands to `step` is released once its
+    // successor is materialized: the truncated init and rounds 1-2
+    val released = scala.collection.mutable.Buffer.empty[Int]
+    val (live, rounds) = try {
+      ScopedCache.iterate("spec.quiet", ScopedCache.truncate(frame(10), eager = true), 3)(
+        g => { released += rddId(g); Some(g.select((col("x") + 1).as("x"))) })
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+    assert(rounds === 3 && released.size === 3)
+    assert(released.toSet.intersect(persistentIds).isEmpty)
+    assert(persistentIds.contains(rddId(live)) && xs(live) === (3L until 13L))
+    ScopedCache.releaseCheckpoint(live)
+    assert(!persistentIds.contains(rddId(live)))
+    val warned = logged.asScala.filter(_.contains("was locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
+  }
+
   test("releaseCheckpoint frees only the handle's own blocks") {
     val a = ScopedCache.truncate(frame(10), eager = true)
     val b = ScopedCache.truncate(a.select((col("x") * 2).as("x")), eager = true)

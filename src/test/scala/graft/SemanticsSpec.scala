@@ -1312,6 +1312,25 @@ class SemanticsSpec extends AnyFunSuite with SparkSpec {
     assert(got === Seq((1000L, 3L, 2.0, 8.0), (1001L, 3L, 10.0, 8.0)))
   }
 
+  test("k-means and PQ training fail loudly on a wrong-dim vector, naming its vec_id") {
+    val session = spark
+    import session.implicits._
+    // one 63-dim vector among 64-dim ones: the recompute pivots on fixed
+    // dim positions, so training must fail, not poison a centroid
+    val emb = Seq((7L, Seq.fill(64)(1f), 0), (8L, Seq.fill(64)(2f), 0),
+      (42L, Seq.fill(63)(1f), 1)).toDF("vec_id", "embedding", "label")
+    val trainers = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "kmeansTrainOf" -> (e => operators.Similarity.kmeansTrainOf(e, k = 2, iters = 2)),
+      "pqTrainOf" -> (e => operators.Similarity.pqTrainOf(e)))
+    for ((name, train) <- trainers) {
+      val e = intercept[Exception](train(emb).collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("requires 64-dim vectors") && m.contains("vec_id 42")),
+        s"$name: ${msgs.mkString("\n")}")
+    }
+  }
+
   test("q182 SemDeDup prunes the redundant core, keeps the centroid-farthest") {
     val session = spark
     import session.implicits._

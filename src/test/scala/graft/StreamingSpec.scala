@@ -1213,7 +1213,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
     val before = operators.Similarity
       .ivfPqSearchSegments(spark, emb, base, segs).collect().toSeq
     val after = operators.Similarity
-      .ivfPqSearchIndexDir(spark, emb, out).collect().toSeq
+      .ivfPqSearchSegments(spark, emb, out).collect().toSeq
     assert(before.nonEmpty)
     assert(after === before)
   }
